@@ -20,6 +20,7 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, MapType, StructField, StructType
 
 from lagoon_spark.checkpointing import unpin as _unpin
 from lagoon_spark.catalog import Catalog, SourceInfo
@@ -168,6 +169,37 @@ def _seq_fold_sq(vec) -> float:
     return acc
 
 
+def _dir_key(path: str) -> "tuple[int, int] | None":
+    """Identity of a table directory, or None when it is absent. An
+    overwrite or a rename swap yields a new inode; adding or removing
+    a file (an append, a staged move into a new partition) moves the
+    mtime. Assumes sub-second directory mtimes (ext4, xfs, APFS): with
+    whole-second mtimes, a rewrite by another process in the same
+    second that got the old inode number back would go unnoticed."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return (st.st_ino, st.st_mtime_ns)
+
+
+def _as_nullable(dt):
+    """``dt`` as a parquet read returns it: every field, array element
+    and map value nullable (Spark's ``DataType.asNullable``)."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [
+                StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
 class Lagoon:
     def __init__(
         self,
@@ -190,6 +222,9 @@ class Lagoon:
         # repeated probes must not pay a Spark job each to re-collect it
         self._cent_cache: dict[str, tuple] = {}
         self._book_cache: dict[str, tuple] = {}
+        # path → (_dir_key, schema) of the tables this engine wrote or
+        # read: see _read_table
+        self._table_schemas: dict[str, tuple] = {}
 
     # -- lifecycle -----------------------------------------------------------
 
@@ -219,6 +254,44 @@ class Lagoon:
 
     def _data_path(self, table_name: str) -> str:
         return os.path.join(self.warehouse, "data", table_name)
+
+    # -- engine-owned tables ---------------------------------------------------
+
+    def _write_table(
+        self, df: DataFrame, path: str, partition_by: "tuple[str, ...]" = ()
+    ) -> None:
+        """Overwrite the engine-owned table at ``path`` with ``df`` and
+        remember the schema a read will find there: nullable, partition
+        columns last (the reader appends them in directory order)."""
+        writer = df.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(path)
+        fields = {f.name: f for f in _as_nullable(df.schema).fields}
+        schema = StructType(
+            [f for n, f in fields.items() if n not in partition_by]
+            + [fields[n] for n in partition_by]
+        )
+        self._table_schemas[path] = (_dir_key(path), schema)
+
+    def _read_table(self, path: str, *parts: str) -> DataFrame:
+        """Read the engine-owned table at ``path`` (with ``parts``: only
+        those partition directories of it). While the directory is the
+        one its schema was remembered from, the schema is passed in, so
+        Spark starts no footer-inference job; otherwise Spark infers it
+        and a whole-table read remembers it. Only schemas are kept —
+        every read lists the files afresh."""
+        key = _dir_key(path)  # before the read: a later rewrite re-keys
+        hit = self._table_schemas.get(path)
+        reader = self.spark.read
+        if parts:
+            reader = reader.option("basePath", path)
+        if key is not None and hit is not None and hit[0] == key:
+            reader = reader.schema(hit[1])
+        df = reader.parquet(*(parts or (path,)))
+        if key is not None and not parts:
+            self._table_schemas[path] = (key, df.schema)
+        return df
 
     # -- ingest (POST /sources; `Ingest.hs:82-132`) --------------------------
 
@@ -506,8 +579,8 @@ class Lagoon:
         try:
             untyped = with_ix(csvmod.read_untyped(self.spark, path, fmt, width))
             untyped = untyped.select("ix", *[f"c{i+1}" for i in range(width)])
-            untyped.write.mode("overwrite").parquet(self._data_path(table_name))
-            stored = self.spark.read.parquet(self._data_path(table_name))
+            self._write_table(untyped, self._data_path(table_name))
+            stored = self._read_table(self._data_path(table_name))
             row_count = stored.count()
             emit({"event": "loaded", "rows": row_count})
 
@@ -539,7 +612,7 @@ class Lagoon:
                         for ic in inferred
                     ],
                 )
-                typed_df.write.mode("overwrite").parquet(self._data_path(typed_table))
+                self._write_table(typed_df, self._data_path(typed_table))
                 emit({"event": "typed", "columns": [(h, t) for _p, h, t in cols]})
 
             self.catalog.set_columns(ix, cols)
@@ -597,10 +670,8 @@ class Lagoon:
             untyped = raw.select(
                 "ix", *[canon(p, f.dataType).alias(p) for p, f in zip(phys, fields)]
             )
-            untyped.write.mode("overwrite").parquet(self._data_path(table_name))
-            row_count = self.spark.read.parquet(
-                self._data_path(table_name)
-            ).count()
+            self._write_table(untyped, self._data_path(table_name))
+            row_count = self._read_table(self._data_path(table_name)).count()
             emit({"event": "loaded", "rows": row_count})
 
             friendly = no_dup_names([f.name for f in fields])
@@ -621,7 +692,7 @@ class Lagoon:
                     for (p, _h, t), f in zip(cols, fields)
                 ],
             )
-            typed_df.write.mode("overwrite").parquet(self._data_path(typed_table))
+            self._write_table(typed_df, self._data_path(typed_table))
             emit({"event": "typed", "columns": [(h, t) for _p, h, t in cols]})
             self.catalog.set_columns(ix, cols)
             self.catalog.update_source(
@@ -696,8 +767,8 @@ class Lagoon:
             lines = self.spark.read.text(src).withColumnRenamed("value", "c1")
             lines = lines.filter(F.trim(F.col("c1")) != "")
             untyped = with_ix(lines).select("ix", "c1")
-            untyped.write.mode("overwrite").parquet(self._data_path(table_name))
-            stored = self.spark.read.parquet(self._data_path(table_name))
+            self._write_table(untyped, self._data_path(table_name))
+            stored = self._read_table(self._data_path(table_name))
             row_count = stored.count()
             emit({"event": "loaded", "rows": row_count})
 
@@ -764,14 +835,36 @@ class Lagoon:
         table = (
             info.typed_table_name if (typed and info.typed_table_name) else info.table_name
         )
-        df = self.spark.read.parquet(self._data_path(table))
+        df = self._read_table(self._data_path(table))
         if "ixs" in df.columns:
             phys = [c[0] for c in info.columns]
             df = df.filter(F.array_contains("ixs", info.version)).select("ix", *phys)
         return df
 
+    def _view_signature(self, info: SourceInfo) -> tuple:
+        """Everything a version's views are built from: the names they
+        bind, the columns they expose, and the identity of the table
+        directories whose file listing they captured."""
+        return (
+            self.warehouse, info.ix, info.version,
+            info.view_name, info.typed_view_name,
+            info.table_name, info.typed_table_name,
+            tuple(tuple(c) for c in info.columns), info.row_count,
+            _dir_key(self._data_path(info.table_name)),
+            info.typed_table_name
+            and _dir_key(self._data_path(info.typed_table_name)),
+        )
+
     def register_views(self, info: SourceInfo) -> None:
-        """A11: friendly-name views `<name>_v<N>` (+`_typed`)."""
+        """A11: friendly-name views `<name>_v<N>` (+`_typed`).
+
+        Records the version's signature (:meth:`_view_signature`) on
+        the session, next to ``sql()``'s ``_lagoon_views_marker``: temp
+        views are session-global, so the record says what the session's
+        views of that name were built from, whichever engine built
+        them. :meth:`register_all_views` re-registers a version only
+        when its signature moved."""
+        sig = self._view_signature(info)  # stat before the reads
         phys = [c[0] for c in info.columns]
         friendly = [c[1] for c in info.columns]
         untyped = self._source_frame(info, typed=False)
@@ -783,8 +876,20 @@ class Lagoon:
             typed.select(
                 "ix", *[F.col(p).alias(h) for p, h in zip(phys, friendly)]
             ).createOrReplaceTempView(info.typed_view_name)
+        self._view_sigs()[info.view_name] = sig
+
+    def _view_sigs(self) -> dict:
+        """The session's view name → signature record."""
+        sigs = getattr(self.spark, "_lagoon_view_sigs", None)
+        if sigs is None:
+            sigs = self.spark._lagoon_view_sigs = {}
+        return sigs
 
     def register_all_views(self) -> None:
+        """Bring every visible version's views up to date, re-registering
+        only versions whose signature changed since the session's views
+        of that name were built: registration cost follows the changed
+        versions, not the catalog's size."""
         import warnings
 
         from pyspark.errors import AnalysisException
@@ -792,9 +897,12 @@ class Lagoon:
         from lagoon_spark.catalog import _visible
 
         sources = _visible(self.catalog.load("sources"))
+        sigs = self._view_sigs()
         for _, row in sources.iterrows():
             try:
-                self.register_views(self.catalog.get_source_by_ix(int(row["ix"])))
+                info = self.catalog.get_source_by_ix(int(row["ix"]))
+                if sigs.get(info.view_name) != self._view_signature(info):
+                    self.register_views(info)
             except (FileNotFoundError, AnalysisException) as e:
                 # a missing/corrupt data dir must not poison every later
                 # query on the surviving sources — but say WHICH source
@@ -855,7 +963,7 @@ class Lagoon:
             "ix",
             *[cast_expr(p, ColumnType(t)).alias(p) for p, _h, t in cols],
         )
-        typed_df.write.mode("overwrite").parquet(self._data_path(typed_table))
+        self._write_table(typed_df, self._data_path(typed_table))
         self.catalog.update_source(
             info.ix, typed_table_name=typed_table, typed_view_name=typed_view
         )
@@ -899,7 +1007,7 @@ class Lagoon:
             else info.table_name
         )
         path = self._data_path(table)
-        df = self.spark.read.parquet(path)
+        df = self._read_table(path)
         to_phys = {h: p for p, h, _t in info.columns}
         cols_p = [to_phys.get(c, c) for c in cols]
         missing = [c for c in cols_p if c not in df.columns]
@@ -912,11 +1020,9 @@ class Lagoon:
             else keyed.repartitionByRange("zorder")
         )
         tmp = path + ".__optimizing"
-        part.sortWithinPartitions("zorder").drop("zorder").write.mode(
-            "overwrite"
-        ).parquet(tmp)
+        self._write_table(part.sortWithinPartitions("zorder").drop("zorder"), tmp)
         n_old = df.count()
-        n_new = self.spark.read.parquet(tmp).count()
+        n_new = self._read_table(tmp).count()
         if n_old != n_new:
             shutil.rmtree(tmp, ignore_errors=True)
             raise RuntimeError(
@@ -925,6 +1031,8 @@ class Lagoon:
             )
         shutil.rmtree(path)
         os.rename(tmp, path)
+        schema = self._table_schemas.pop(tmp)[1]
+        self._table_schemas[path] = (_dir_key(path), schema)
         self.register_views(info)
         return info
 
@@ -960,7 +1068,7 @@ class Lagoon:
         typed_df = stored.select(
             "ix", *[cast_expr(ic.name, ic.type).alias(ic.name) for ic in inferred]
         )
-        typed_df.write.mode("overwrite").parquet(self._data_path(typed_table))
+        self._write_table(typed_df, self._data_path(typed_table))
         self.catalog.update_source(
             info.ix, typed_table_name=typed_table, typed_view_name=typed_view
         )
@@ -1117,6 +1225,7 @@ class Lagoon:
         for v in (info.view_name, info.typed_view_name):
             if v:
                 self.spark.catalog.dropTempView(v)
+        self._view_sigs().pop(info.view_name, None)
         # ANN index artifacts are per-version (keyed on this ix) —
         # nothing else can reference them, so they go with the version
         idx_root = os.path.join(self.warehouse, "index")
@@ -1289,10 +1398,13 @@ class Lagoon:
         """Security-checked SQL (`Verified.hs:795-854`): walk the parsed
         plan, reject writes/unknown relations, check per-dataset ACLs.
 
-        View registration is memoized on the catalog mutation counter —
-        repeated queries against an unchanged catalog skip the
-        N-parquet-footer re-registration pass (the reference's views
-        simply persist in Postgres)."""
+        View registration is memoized at two levels. Queries against an
+        unchanged catalog state skip it altogether. After a change, only
+        the versions whose signature moved (names, columns, row count,
+        table directory identity; see :meth:`register_views`) are
+        re-registered, and their reads carry remembered schemas, so no
+        Spark job runs. Like the reference's views, which persist in
+        Postgres, a version's views are built once per change."""
         from lagoon_spark.security import verify_user_query
 
         from lagoon_spark.functions.json_ops import (
@@ -1694,7 +1806,7 @@ class Lagoon:
             [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
             "cell int, centroid array<double>",
         )
-        cent_df.write.mode("overwrite").parquet(os.path.join(idx_dir, "centroids"))
+        self._write_table(cent_df, os.path.join(idx_dir, "centroids"))
         # repartition by cell BEFORE the partitioned write: without it
         # every input partition spills a sliver into every cell dir
         # (k x input-partitions tiny files, and probe-time listing cost
@@ -1713,30 +1825,23 @@ class Lagoon:
             sp = os.path.join(idx_dir, stale_stage)
             if os.path.isdir(sp):
                 _shutil.rmtree(sp)
-        assigns.select("ix", "__vec", "cell", *inc_names).repartition(
-            F.col("cell")
-        ).sortWithinPartitions("ix").write.partitionBy("cell").mode(
-            "overwrite"
-        ).parquet(os.path.join(idx_dir, "assignments"))
+        ass_root = os.path.join(idx_dir, "assignments")
+        self._write_table(
+            assigns.select("ix", "__vec", "cell", *inc_names)
+            .repartition(F.col("cell"))
+            .sortWithinPartitions("ix"),
+            ass_root,
+            partition_by=("cell",),
+        )
         # row watermark for incremental extension: rows with ix beyond
         # this were not seen by this build (streaming append grows a
         # source in place; extend_ann_index indexes just the delta).
-        # Read from the JUST-WRITTEN assignments — a columnar ix-only
-        # scan of the index artifact, not another full source pass
-        # through the from_json parse
-        hi = (
-            self.spark.read.parquet(os.path.join(idx_dir, "assignments"))
-            .agg(F.max("ix"))
-            .collect()[0][0]
-        )
-        # build-time quantization error: the baseline the extension
-        # drift metric compares against (one columnar artifact pass)
-        train_d = self._ann_mean_sq_dist(
-            self.spark.read.parquet(
-                os.path.join(idx_dir, "assignments")
-            ).select("cell", "__vec"),
-            cent_df,
-        )
+        # Read from the JUST-WRITTEN assignments — a columnar scan of
+        # the index artifact, not another full source pass through the
+        # from_json parse — in the same pass as the build-time
+        # quantization error, the baseline the extension drift metric
+        # compares against
+        train_d, hi = self._ann_assign_stats(self._read_table(ass_root), cent_df)
         meta = {
             "source_ix": info.ix,
             "column": phys,
@@ -1759,9 +1864,7 @@ class Lagoon:
             # subspace iteration (measured 10x build blowup at 100k
             # vectors); the parquet read makes every PQ pass a cheap
             # columnar scan
-            stored = self.spark.read.parquet(
-                os.path.join(idx_dir, "assignments")
-            )
+            stored = self._read_table(ass_root)
             residuals = stored.join(F.broadcast(cent_df), "cell").select(
                 "ix",
                 "cell",
@@ -1793,27 +1896,27 @@ class Lagoon:
                     pq_target / n_rows if n_rows > pq_target else None
                 ),
             )
-            (
-                # include columns ride in the codes partitions too, so
-                # a filtered IVFADC probe's ADC shortlist already honors
-                # the predicate — no over-fetch needed on this path
+            # include columns ride in the codes partitions too, so a
+            # filtered IVFADC probe's ADC shortlist already honors the
+            # predicate — no over-fetch needed on this path
+            self._write_table(
                 residuals.select("ix", "cell", "__norm", *inc_names)
                 .join(codes_df, "ix")
                 .repartition(F.col("cell"))
-                .sortWithinPartitions("ix")
-                .write.partitionBy("cell")
-                .mode("overwrite")
-                .parquet(os.path.join(idx_dir, "codes"))
+                .sortWithinPartitions("ix"),
+                os.path.join(idx_dir, "codes"),
+                partition_by=("cell",),
             )
             book_rows = [
                 (j, c, [float(x) for x in books[j][c]])
                 for j in range(pq_m)
                 for c in range(pq_k)
             ]
-            self.spark.createDataFrame(
-                book_rows, "subspace int, code int, centroid array<double>"
-            ).write.mode("overwrite").parquet(
-                os.path.join(idx_dir, "codebooks")
+            self._write_table(
+                self.spark.createDataFrame(
+                    book_rows, "subspace int, code int, centroid array<double>"
+                ),
+                os.path.join(idx_dir, "codebooks"),
             )
             meta.update(
                 {"format": 3, "pq_m": pq_m, "pq_k": pq_k,
@@ -2060,34 +2163,36 @@ class Lagoon:
         nothing: no marker → the delta never happened; marker → the
         recovery path finishes the move."""
         stage = root + ".staging"
-        (
-            df.repartition(F.col("cell"))
-            .sortWithinPartitions("ix")
-            .write.partitionBy("cell")
-            .mode("overwrite")
-            .parquet(stage)
+        self._write_table(
+            df.repartition(F.col("cell")).sortWithinPartitions("ix"),
+            stage,
+            partition_by=("cell",),
         )
         self._ann_stage_commit(root, stage)
 
-    def _ann_mean_sq_dist(self, assigns: DataFrame, cent_df) -> "float | None":
+    def _ann_assign_stats(
+        self, assigns: DataFrame, cent_df
+    ) -> "tuple[float | None, int | None]":
         """Mean squared distance of assigned vectors to their centroid
         — the quantization-error scalar behind the extension drift
-        metric. One columnar pass + broadcast join; rows only."""
+        metric — and the highest ``ix`` among them. One columnar pass +
+        broadcast join; rows only."""
         row = (
             assigns.join(F.broadcast(cent_df), "cell")
             .select(
+                "ix",
                 F.aggregate(
                     F.zip_with(
                         "__vec", "centroid", lambda x, y: (x - y) * (x - y)
                     ),
                     F.lit(0.0),
                     lambda a, x: a + x,
-                ).alias("__d")
+                ).alias("__d"),
             )
-            .agg(F.avg("__d"))
-            .collect()[0][0]
+            .agg(F.avg("__d"), F.max("ix"))
+            .collect()[0]
         )
-        return float(row) if row is not None else None
+        return (float(row[0]) if row[0] is not None else None), row[1]
 
 
     def _ann_centroids(self, idx_dir: str) -> list:
@@ -2112,9 +2217,8 @@ class Lagoon:
         # probes of an unchanged index (measured ~0.2 s/probe of
         # re-listing + footer decode saved on both probe paths).
         self.spark.catalog.refreshByPath(idx_dir)
-        cents = self.spark.read.parquet(
-            os.path.join(idx_dir, "centroids")
-        ).collect()  # k rows — metadata-sized by construction
+        # k rows — metadata-sized by construction
+        cents = self._read_table(os.path.join(idx_dir, "centroids")).collect()
         self._cent_cache[idx_dir] = (key, cents)
         return cents
 
@@ -2171,9 +2275,7 @@ class Lagoon:
         codes_root = os.path.join(idx_dir, "codes")
 
         def _max_ix(root: str) -> int:
-            v = (
-                self.spark.read.parquet(root).agg(F.max("ix")).collect()[0][0]
-            )
+            v = self._read_table(root).agg(F.max("ix")).collect()[0][0]
             return int(v) if v is not None else 0
 
         # pre-recovery watermark (round-10 advice): a crashed extend's
@@ -2240,7 +2342,7 @@ class Lagoon:
             if wm_codes < target:
                 healed = healed or wm_codes < watermark  # pre-existing lag
                 lag = (
-                    self.spark.read.parquet(ass_root)
+                    self._read_table(ass_root)
                     .filter(F.col("ix") > wm_codes)
                     .select("ix", "__vec", "cell", *inc_names)
                 )
@@ -2251,7 +2353,7 @@ class Lagoon:
                     ],
                     "cell int, centroid array<double>",
                 )
-                books_rows = self.spark.read.parquet(
+                books_rows = self._read_table(
                     os.path.join(idx_dir, "codebooks")
                 ).collect()
                 pq_m, pq_k = int(meta["pq_m"]), int(meta["pq_k"])
@@ -2305,12 +2407,8 @@ class Lagoon:
                 [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
                 "cell int, centroid array<double>",
             )
-            delta = (
-                self.spark.read.parquet(ass_root)
-                .filter(F.col("ix") > drift_floor)
-                .select("cell", "__vec")
-            )
-            delta_d = self._ann_mean_sq_dist(delta, cent_df)
+            delta = self._read_table(ass_root).filter(F.col("ix") > drift_floor)
+            delta_d, _hi = self._ann_assign_stats(delta, cent_df)
             if delta_d is not None:
                 ratio = delta_d / train_d if train_d > 0 else float("inf")
                 meta["last_extension_drift_ratio"] = round(ratio, 4)
@@ -2471,28 +2569,6 @@ class Lagoon:
         cents = self._ann_centroids(idx_dir)
         probe = self._rank_probe_cells(cents, query_vec, nprobe)
 
-        def _read_cells(root: str) -> DataFrame:
-            # list ONLY the probed cell directories: spark.read on the
-            # root would enumerate all k partition dirs before pruning,
-            # so probe latency would grow with k even though the I/O
-            # doesn't. An absent dir is an empty cell - contributes no
-            # candidates.
-            dirs = [
-                d
-                for c in probe
-                if os.path.isdir(d := os.path.join(root, f"cell={c}"))
-            ]
-            if dirs:
-                return (
-                    self.spark.read.option("basePath", root)
-                    .parquet(*dirs)
-                    .filter(F.col("cell").isin(probe))
-                )
-            # every probed cell empty (tiny corpus / stale index)
-            return self.spark.read.parquet(root).filter(
-                F.col("cell").isin(probe)
-            )
-
         from lagoon_spark.operators.similarity import cosine_topk
 
         ass_root = os.path.join(idx_dir, "assignments")
@@ -2503,7 +2579,7 @@ class Lagoon:
 
         def assigns_df() -> DataFrame:
             if not _assigns_cache:
-                _assigns_cache.append(_read_cells(ass_root))
+                _assigns_cache.append(self._read_cells(ass_root, probe))
             return _assigns_cache[0]
 
         where_expr, where_in_index, match_ix = self._where_tier(
@@ -2649,21 +2725,7 @@ class Lagoon:
         union = sorted({c for s in probe_sets for c in s})
 
         ass_root = os.path.join(idx_dir, "assignments")
-        dirs = [
-            d
-            for c in union
-            if os.path.isdir(d := os.path.join(ass_root, f"cell={c}"))
-        ]
-        if dirs:
-            assigns = (
-                self.spark.read.option("basePath", ass_root)
-                .parquet(*dirs)
-                .filter(F.col("cell").isin(union))
-            )
-        else:
-            assigns = self.spark.read.parquet(ass_root).filter(
-                F.col("cell").isin(union)
-            )
+        assigns = self._read_cells(ass_root, union)
         if "__vec" in assigns.columns:  # format 2/3: self-contained
             candidates = assigns
         else:  # format-1 artifact: vectors still live in the source
@@ -2757,6 +2819,20 @@ class Lagoon:
         return scored.withColumn(
             "rank", F.row_number().over(w).cast("long")
         ).filter(F.col("rank") <= topk)
+
+    def _read_cells(self, root: str, cells: "list[int]") -> DataFrame:
+        """Rows of the ANN artifact at ``root`` in ``cells``. Lists only
+        those cell directories: a read of the root would enumerate all
+        k partition dirs before pruning, so probe latency would grow
+        with k even though the I/O does not. An absent dir is an empty
+        cell; when every probed cell is empty (tiny corpus, stale
+        index), the whole-root read filters to nothing."""
+        dirs = [
+            d
+            for c in cells
+            if os.path.isdir(d := os.path.join(root, f"cell={c}"))
+        ]
+        return self._read_table(root, *dirs).filter(F.col("cell").isin(cells))
 
     def _rank_probe_cells(
         self, cents, query_vec: "list[float]", nprobe: int
@@ -2926,9 +3002,7 @@ class Lagoon:
         hit = self._book_cache.get(idx_dir)
         if hit and hit[0] == key:
             return hit[1]
-        books = self.spark.read.parquet(
-            os.path.join(idx_dir, "codebooks")
-        ).collect()  # m*k rows — metadata-sized
+        books = self._read_table(os.path.join(idx_dir, "codebooks")).collect()  # m*k rows — metadata-sized
         self._book_cache[idx_dir] = (key, books)
         return books
 
@@ -3105,10 +3179,8 @@ class Lagoon:
         }
         if not dirs:
             return out
-        codes = (
-            self.spark.read.option("basePath", codes_root)
-            .parquet(*dirs)
-            .filter(F.col("cell").isin(union))
+        codes = self._read_table(codes_root, *dirs).filter(
+            F.col("cell").isin(union)
         )
         if where_expr is not None:
             codes = codes.filter(where_expr)
@@ -3303,10 +3375,8 @@ class Lagoon:
             if os.path.isdir(d := os.path.join(codes_root, f"cell={c}"))
         ]
         if dirs:
-            codes = (
-                self.spark.read.option("basePath", codes_root)
-                .parquet(*dirs)
-                .filter(F.col("cell").isin(probe))
+            codes = self._read_table(codes_root, *dirs).filter(
+                F.col("cell").isin(probe)
             )
         else:
             # probed cells were all empty at build time (no cell dirs):
@@ -3456,10 +3526,8 @@ class Lagoon:
         try:
             phys_cols = [c[0] for c in info.columns]
             out = numbered.select("ix", *phys_cols)
-            out.write.mode("overwrite").parquet(self._data_path(table_name))
-            row_count = self.spark.read.parquet(
-                self._data_path(table_name)
-            ).count()
+            self._write_table(out, self._data_path(table_name))
+            row_count = self._read_table(self._data_path(table_name)).count()
             self.catalog.set_columns(ix, list(info.columns))
             self.catalog.update_source(
                 ix, row_count=row_count, json_type=info.json_type
@@ -3471,16 +3539,18 @@ class Lagoon:
         finally:
             _unpin(pinned)
         new_info = self.catalog.get_source_by_ix(ix)
-        self.register_views(new_info)
         if info.typed_table_name:
             # the parent was typed; the survivor version keeps the
             # parent's EXACT types — cast directly from the copied
             # catalog columns rather than re-running inference, which
             # could narrow a column once outlier rows are deduped away
-            # (parent TEXT → survivor INTEGER schema drift)
+            # (parent TEXT → survivor INTEGER schema drift). It
+            # registers the version's views, both of them, once.
             new_info = self._materialize_typed_as_is(
                 new_info, list(info.columns)
             )
+        else:
+            self.register_views(new_info)
         if reindex:
             # rebuild the parent version's ANN indexes over the
             # survivors — same column, k, iters; per-version artifacts
@@ -3597,7 +3667,7 @@ class Lagoon:
         phys = [f"c{i+1}" for i in range(width)]
 
         tables = [
-            (info, self.spark.read.parquet(self._data_path(info.table_name)))
+            (info, self._read_table(self._data_path(info.table_name)))
             for info in infos
         ]
         compact_names = {i.table_name for i, df in tables if "ixs" in df.columns}
@@ -3767,7 +3837,7 @@ class Lagoon:
             # recompaction: never overwrite the directory being read —
             # alternate deterministically between two physical names
             compact_table = f"compact{latest.ix}b"
-        compacted.write.mode("overwrite").parquet(self._data_path(compact_table))
+        self._write_table(compacted, self._data_path(compact_table))
 
         # repoint every version at the compacted table; drop originals;
         # re-register views (register_views applies the per-version
@@ -3853,8 +3923,8 @@ class Lagoon:
         )
         try:
             out = with_ix(joined).select("ix", "row_ix", "foreign_ix", metadata_field, "value")
-            out.write.mode("overwrite").parquet(self._data_path(table_name))
-            row_count = self.spark.read.parquet(self._data_path(table_name)).count()
+            self._write_table(out, self._data_path(table_name))
+            row_count = self._read_table(self._data_path(table_name)).count()
             self.catalog.set_columns(
                 ix,
                 [
@@ -3870,9 +3940,7 @@ class Lagoon:
             self._rollback_ingest(ix, table_name)
             raise
         info = self.catalog.get_source_by_ix(ix)
-        self.spark.read.parquet(self._data_path(table_name)).createOrReplaceTempView(
-            info.view_name
-        )
+        self.register_views(info)
         return info
 
     def ingest_stream(

@@ -386,9 +386,15 @@ def connected_components(
     implementation switches to the two-phase large-star/small-star
     algorithm (Kiveris et al., "Connected Components in MapReduce and
     Beyond", SoCC'14), whose round count is O(log² n), and finishes
-    there. ``nodes`` (optional, assumed distinct — the in-repo caller
-    passes one row per signature group) adds isolated nodes, which come
-    out as their own singleton clusters.
+    there. ``nodes`` (optional) adds isolated nodes, which come out as
+    their own singleton clusters.
+
+    Contract: ``nodes`` must hold each id at most once. It is not
+    de-duplicated, because that would cost a shuffle on every call: an
+    isolated id given k times comes out as k identical ``(node,
+    cluster)`` rows. Ids that also appear in ``edges`` come out once
+    whatever their multiplicity in ``nodes``. The in-repo caller,
+    :func:`neardup_clusters`, passes one row per signature group.
     """
     from lagoon_spark.checkpointing import pin
 

@@ -398,8 +398,8 @@ class StreamIngestor:
                 F.col("value").alias("c1"),
             )
             batch.write.mode("append").parquet(data_path)
-            total = spark.read.parquet(data_path).count()
-            batch_frame = spark.read.parquet(data_path).filter(
+            total = self.engine._read_table(data_path).count()
+            batch_frame = self.engine._read_table(data_path).filter(
                 F.col("ix") > st.row_count
             )
             # malformed values raise here (worker-side JsonSplitError) —
@@ -482,11 +482,11 @@ class StreamIngestor:
                 *[f"c{i + 1}" for i in range(new_width)],
             )
             untyped.write.mode("append").parquet(data_path)
-            batch_rows = spark.read.parquet(data_path).count() - st.row_count
+            batch_rows = self.engine._read_table(data_path).count() - st.row_count
 
             # incremental lattice fold: batch aggregate ⊔ running state
             phys = [f"c{i + 1}" for i in range(new_width)]
-            batch_frame = spark.read.parquet(data_path).filter(
+            batch_frame = self.engine._read_table(data_path).filter(
                 F.col("ix") > st.row_count
             )
             aggs = []
@@ -519,7 +519,7 @@ class StreamIngestor:
             # not guarantee castability for word-booleans widened to
             # INT — the reference's Postgres cast fails there too); the
             # rollback guard then restores the pre-batch state.
-            full = spark.read.parquet(data_path)
+            full = self.engine._read_table(data_path)
             casts = [cast_expr(ic.name, ic.type).alias(ic.name) for ic in inferred]
             if first_batch or widened or needs_rewrite:
                 self._overwrite(full.select("ix", *casts), typed_path)
@@ -685,7 +685,7 @@ class StreamIngestor:
                 ],
             )
             untyped.write.mode("append").parquet(data_path)
-            total = spark.read.parquet(data_path).count()
+            total = self.engine._read_table(data_path).count()
             batch_rows = total - st.row_count
 
             if first_batch:
@@ -696,7 +696,7 @@ class StreamIngestor:
                 old_typed = spark.read.option("mergeSchema", "true").parquet(
                     typed_path
                 )
-                untyped_hist = spark.read.parquet(data_path).filter(
+                untyped_hist = self.engine._read_table(data_path).filter(
                     F.col("ix") <= st.row_count
                 )
                 hist_cols = []

@@ -472,10 +472,18 @@ def quality_gate(
     oracle-checkable. This is the serving half of the d27/d28/d30
     quality plane run continuously over a landing zone.
 
-    Weight-table tiering rides :func:`text.with_hashed_linear_score`:
-    past ``WEIGHTS_LITERAL_MAX_F`` coefficients — or with an explicit
-    ``weights_df`` — the table crosses the plan as one broadcast row
-    (a stream-static broadcast join), never as expression text, so a
+    The score and token count come from
+    :func:`text.hashed_score_struct`, one struct computed once per row
+    and passed through a generator barrier (``explode`` of a one-element
+    array), so the per-token rolling-hash fold runs once; the filter and
+    the output read the struct's fields. The weight-table tiering is
+    inlined here, with the same thresholds as
+    :func:`text.with_hashed_linear_score`: no ``weights`` uses the
+    deterministic pseudo-table, and up to ``WEIGHTS_LITERAL_MAX_F``
+    coefficients embed in the expression as a literal array; past
+    that, or with an explicit ``weights_df``, the table crosses the
+    plan as one broadcast row (a stream-static broadcast join) read
+    through ``weights_col``, never as expression text, so a
     millions-of-bins production table serves in the same streaming
     plan."""
     from lagoon_spark.operators.text import (

@@ -503,6 +503,208 @@ def test_view_memo_keyed_on_warehouse_state(spark, tmp_path):
     assert a.sql("SELECT count(*) AS n FROM memo_ds2_v1").collect()[0].n == 2
 
 
+def test_view_memo_follows_another_engines_rewrite(spark, tmp_path):
+    """A version's views are re-registered when its table directory is
+    rewritten under the same path. Engine B, on its own session, swaps
+    in an optimize_layout rewrite (a renamed directory; the old files
+    are gone, so a stale view could not even run); optimize_layout
+    leaves the catalog as it is, so A's next catalog change sends its
+    sql() down the miss path, where only the signature notices."""
+    import os
+
+    wh = str(tmp_path / "wh")
+    a = Lagoon(spark, wh, user="u")
+    a.init_db()
+    csv = "x,y\n" + "".join(f"{i},{i % 5}\n" for i in range(200))
+    info = a.ingest(_write(tmp_path, "o.csv", csv), "opt")
+    q = "SELECT count(*) AS n, sum(x) AS s FROM opt_v1_typed"
+    assert tuple(a.sql(q).collect()[0]) == (200, sum(range(200)))
+    path = a._data_path(info.typed_table_name)
+    ino = os.stat(path).st_ino
+
+    b = Lagoon(spark.newSession(), wh, user="u")
+    b.optimize_layout(info, ["y"], num_files=4)
+    assert os.stat(path).st_ino != ino  # same path, renamed directory
+
+    a.ingest(_write(tmp_path, "o2.csv", "z\n1\n"), "opt_other")
+    assert tuple(a.sql(q).collect()[0]) == (200, sum(range(200)))
+    # A's remembered schemas are keyed on the directory as well
+    assert a.dataframe(info, typed=True).count() == 200
+
+
+def test_view_memo_counts_streamed_append(spark, tmp_path):
+    """A streaming ``append`` batch landed by another engine grows a
+    version in place (same table, same names); A's sql() counts it."""
+    wh = str(tmp_path / "wh")
+    a = Lagoon(spark, wh, user="u")
+    a.init_db()
+    inbox = tmp_path / "inbox"
+    inbox.mkdir()
+    ckpt = str(tmp_path / "ckpt")
+    (inbox / "a.csv").write_text("id,v\n1,5\n2,6\n")
+    a.ingest_stream(str(inbox), "flow", checkpoint_dir=ckpt, mode="append").run_available()
+    q = "SELECT count(*) AS n, sum(v) AS s FROM flow_v1_typed"
+    assert tuple(a.sql(q).collect()[0]) == (2, 11)
+
+    (inbox / "b.csv").write_text("id,v\n3,7\n")
+    b = Lagoon(spark.newSession(), wh, user="u")
+    b.ingest_stream(str(inbox), "flow", checkpoint_dir=ckpt, mode="append").run_available()
+    assert tuple(a.sql(q).collect()[0]) == (3, 18)
+    assert a.sql("SELECT count(*) AS n FROM flow_v1").collect()[0].n == 3
+
+
+def test_view_memo_after_delete_and_reingest(spark, tmp_path):
+    """Deleting a version clears its signature record; re-ingesting the
+    same name (by another engine, on its own session) serves the new
+    data through A's views."""
+    wh = str(tmp_path / "wh")
+    a = Lagoon(spark, wh, user="u")
+    a.init_db()
+    info = a.ingest(_write(tmp_path, "r1.csv", "x\n1\n2\n3\n"), "again")
+    q = f"SELECT count(*) AS n, sum(x) AS s FROM {info.typed_view_name}"
+    assert tuple(a.sql(q).collect()[0]) == (3, 6)
+    a.delete_source(info)
+    assert info.view_name not in spark._lagoon_view_sigs
+
+    # same ix, names, columns and row count: only the rewritten table
+    # directory tells the two versions apart
+    b = Lagoon(spark.newSession(), wh, user="u")
+    again = b.ingest(_write(tmp_path, "r2.csv", "x\n10\n20\n30\n"), "again")
+    assert (again.ix, again.table_name) == (info.ix, info.table_name)
+    assert tuple(a.sql(q).collect()[0]) == (3, 60)
+
+
+def _job_ids(spark, fn) -> list:
+    """Ids of the Spark jobs ``fn`` starts, read from the status tracker
+    under a job group of their own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_engine_table_reads_start_no_inference_job(lagoon, tmp_path):
+    """A read of a table this engine wrote passes the remembered schema:
+    building the frame starts no Spark job, where a plain parquet read
+    of the same directory starts a footer-inference job."""
+    info = lagoon.ingest(_write(tmp_path, "s.csv", SIMPLE), "noinfer")
+    for typed in (False, True):
+        assert _job_ids(lagoon.spark, lambda: lagoon._source_frame(info, typed)) == []
+    path = lagoon._data_path(info.table_name)
+    assert _job_ids(lagoon.spark, lambda: lagoon.spark.read.parquet(path)) != []
+
+
+def test_export_after_dedup_starts_only_the_write(lagoon, tmp_path):
+    """After dedup_source, the export's sql() takes the view-memo miss
+    path, yet every version's views are current: it re-registers no
+    version and starts the same jobs as the same export on the hit
+    path."""
+    base = "the quick brown fox jumps over the lazy dog " * 3
+    texts = [base + "short", base + "short", "completely different text here ok"]
+    p = tmp_path / "c.csv"
+    p.write_text("txt,v\n" + "\n".join(f"{t},{i}" for i, t in enumerate(texts)) + "\n")
+    lagoon.ingest(str(p), "exp")
+    lagoon.sql("SELECT 1 FROM exp_v1").collect()
+    info = lagoon.dedup_source("exp", "txt", min_matches=6)
+    out = str(tmp_path / "out")
+    q = f"SELECT ix, txt FROM {info.view_name}"
+    registered = []
+    register = lagoon.register_views
+    lagoon.register_views = lambda i: (registered.append(i.view_name), register(i))
+    miss = _job_ids(lagoon.spark, lambda: lagoon.export_query_dataset(q, out))
+    assert registered == []
+    hit = _job_ids(lagoon.spark, lambda: lagoon.export_query_dataset(q, out))
+    assert 1 <= len(miss) == len(hit) <= 2
+    assert lagoon.spark.read.parquet(out).count() == info.row_count
+
+
+def test_seeded_schemas_match_parquet_reads(lagoon, tmp_path):
+    """Every schema _write_table remembers equals what Spark infers from
+    the directory it just wrote — across every write site: CSV, JSON
+    and parquet ingest (untyped and typed), make_typed,
+    set_column_type, optimize_layout, dedup_source, compact,
+    ingest_extra_data, and the ANN centroids, assignments, codes,
+    codebooks and staged extension."""
+    import json as _json
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    spark = lagoon.spark
+    written = []
+    orig = lagoon._write_table
+
+    def checked(df, path, partition_by=()):
+        orig(df, path, partition_by)
+        seeded = lagoon._table_schemas[path][1]
+        assert seeded == spark.read.parquet(path).schema, path
+        written.append(os.path.basename(path))
+
+    lagoon._write_table = checked
+
+    base = "the quick brown fox jumps over the lazy dog " * 3
+    p = tmp_path / "w.csv"
+    p.write_text(
+        "txt,n,flag\n"
+        + "\n".join(
+            f"{base}{t},{i},{i % 2 == 0}"
+            for i, t in enumerate(["a", "a", "other words entirely"])
+        )
+        + "\n"
+    )
+    src = lagoon.ingest(str(p), "w")
+    lagoon.set_column_type(src, "n", "TEXT")
+    lagoon.optimize_layout(lagoon.catalog.get_source("w", 1), ["n"])
+    lagoon.dedup_source("w", "txt", min_matches=6)
+    lagoon.ingest(str(p), "w")
+    lagoon.compact("w")
+
+    raw = lagoon.ingest(str(p), "w_raw", no_type_inference=True)
+    lagoon.make_typed(raw)
+    lagoon.ingest_extra_data(
+        _write(tmp_path, "x.csv", "1,2\ntrue,false\n"), "w_extra",
+        metadata_source="w_raw", metadata_field="n",
+    )
+    pq_path = str(tmp_path / "n.parquet")
+    pq.write_table(
+        pa.table({"a": [1, 2], "b": [1.5, None], "s": ["x", "y"], "l": [[1], []]}),
+        pq_path,
+    )
+    lagoon.ingest(pq_path, "w_pq")
+
+    inbox = tmp_path / "inbox"
+    inbox.mkdir()
+
+    def drop(fname, vecs):
+        (inbox / fname).write_text("\n".join(_json.dumps(v) for v in vecs) + "\n")
+
+    ing = lagoon.ingest_stream(
+        str(inbox), "w_vec", checkpoint_dir=str(tmp_path / "ck"),
+        mode="append", file_type="json",
+    )
+    drop("b1.jsonl", [[1.0, 0.0], [0.9, 0.1], [0.0, 1.0], [0.1, 0.9]])
+    ing.run_available()
+    lagoon.build_ann_index("w_vec", "data", k=2, iters=2, pq_m=2, pq_k=4)
+    drop("b2.jsonl", [[0.98, 0.02], [0.02, 0.98]])
+    ing.run_available()
+    lagoon.extend_ann_index("w_vec", "data")
+
+    kinds = {w.rstrip("0123456789b").split(".")[0] for w in written}
+    assert {
+        "t", "typed", "compact", "centroids", "assignments", "codes", "codebooks",
+    } <= kinds, written
+    assert any(w.endswith(".__optimizing") for w in written), written
+    assert any(w.endswith(".staging") for w in written), written
+
+
 def test_acl_migration_v3_to_v4(spark, tmp_path):
     """v3→v4 re-anchors version-ix-keyed ACL rows onto sourcename_ix,
     collapsing sibling-version rows at the max level."""

@@ -175,6 +175,17 @@ def test_quality_gate_is_map_only(spark, sf_small):
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
+def test_quality_gate_folds_once(spark, sf_small):
+    """q118 computes the per-token rolling-hash fold once per row: the
+    (score, n_tokens) struct passes one generator barrier, and the
+    filter and the output read its fields. If the optimizer collapsed
+    the barrier, the fold would be copied into each reference."""
+    plan = _plan(get_query("q118_st09_stream_quality_gate").spark_fn(spark, sf_small))
+    operators = [ln.lstrip(" +-*()0123456789:") for ln in plan.splitlines()]
+    assert sum(op.startswith("Generate ") for op in operators) == 1
+    assert plan.count("sequence(1, length(") == 1
+
+
 def test_media_roundtrips_are_map_only(spark, sf_small):
     """m06/m07/m08 (real PNG/WAV/GIF round-trips) must run as ONE
     map chain — Arrow-batched encode then decode with no shuffle in
