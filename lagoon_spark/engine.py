@@ -14,6 +14,7 @@ Data layout: ``<warehouse>/catalog/*.parquet`` (metadata),
 
 from __future__ import annotations
 
+import functools
 import os
 import tempfile
 from typing import Iterator
@@ -111,7 +112,7 @@ def _double_lit(v: "float | None") -> str:
 
 def _exact_cosine(vec, query, qn: float) -> "float | None":
     """The driver-tier cosine: sequential IEEE folds + Spark ROUND
-    HALF_UP at 9 places — bit-parity with the JVM ``cosine_topk``
+    HALF_UP at 9 places — bit-parity with the JVM ``cosine_to``
     expression, INCLUDING the zero-norm edge: ``try_divide`` makes a
     direction-free vector's cosine NULL there, so None here. Degenerate
     ELEMENTS (null / non-finite inside the vector) also yield None —
@@ -1721,10 +1722,10 @@ class Lagoon:
 
         ``include_columns`` copies the named (typed, when available)
         metadata columns INTO the index's cell partitions — and into
-        the PQ codes partitions — so :meth:`ann_search`'s ``where``
-        predicate evaluates inside the probed cells with zero source-
-        table I/O (hybrid/filtered vector search: language, license,
-        date filters at 100 TB must not force a corpus scan)."""
+        the PQ codes partitions — so the ``where`` predicate of
+        :meth:`ann_search_batch` evaluates inside the probed cells with
+        zero source-table I/O (hybrid/filtered vector search: language,
+        license, date filters at 100 TB must not force a corpus scan)."""
         import json as _json
 
         info = self.catalog.get_source(name, version)
@@ -2438,6 +2439,58 @@ class Lagoon:
         self.spark.catalog.refreshByPath(idx_dir)
         return meta
 
+    def _ann_index(
+        self,
+        name: str,
+        column: str,
+        version: "int | None",
+        use_pq: bool = False,
+    ) -> "tuple[SourceInfo, str, str, dict]":
+        """Load and validate one (source, column) index: read gate,
+        ``meta.json``, and the ``use_pq`` format check. Returns
+        ``(info, phys, idx_dir, meta)``; raises KeyError when no index
+        exists for this version+column, ValueError on ``use_pq`` against
+        a non-IVFADC index."""
+        import json as _json
+
+        info = self.catalog.get_source(name, version)
+        self._ann_read_check(info)
+        phys, _h, _t = self.catalog.get_column(info.ix, column)
+        idx_dir = self._ann_index_dir(info, phys)
+        mpath = os.path.join(idx_dir, "meta.json")
+        if not os.path.exists(mpath):
+            # content maintenance (dedup_source, streaming versions)
+            # mints new versions that don't inherit the parent's index —
+            # surface WHICH sibling version is indexed so the caller
+            # knows this is a rebuild, not a typo (round-7 verdict #6)
+            hint = ""
+            for v in self.catalog.versions(name):
+                if v == info.version:
+                    continue
+                sib = self.catalog.get_source(name, v)
+                if any(
+                    m.get("column") == phys
+                    for m in self._ann_metas_for_ix(sib.ix)
+                ):
+                    hint = (
+                        f" (v{v} of {name!r} has one — indexes are "
+                        "per-version; rebuild with build_ann_index, or "
+                        "use dedup_source(..., reindex=True))"
+                    )
+                    break
+            raise KeyError(
+                f"no ANN index for {name!r} v{info.version} column "
+                f"{column!r}; run build_ann_index first{hint}"
+            )
+        with open(mpath) as fh:
+            meta = _json.load(fh)
+        if use_pq and meta.get("format") != 3:
+            raise ValueError(
+                "use_pq=True needs an IVFADC index; rebuild with "
+                "build_ann_index(pq_m=...)"
+            )
+        return info, phys, idx_dir, meta
+
     def index_info(
         self, name: str, column: str, *, version: int | None = None
     ) -> dict:
@@ -2450,20 +2503,7 @@ class Lagoon:
         margin-rich corpora, route epsilon-margin ones through
         full-precision probes. Returns a copy; raises KeyError when no
         index exists for this version+column."""
-        import json as _json
-
-        info = self.catalog.get_source(name, version)
-        self._ann_read_check(info)
-        phys, _h, _t = self.catalog.get_column(info.ix, column)
-        idx_dir = self._ann_index_dir(info, phys)
-        mpath = os.path.join(idx_dir, "meta.json")
-        if not os.path.exists(mpath):
-            raise KeyError(
-                f"no ANN index for {name!r} v{info.version} column "
-                f"{column!r}; run build_ann_index first"
-            )
-        with open(mpath) as fh:
-            return dict(_json.load(fh))
+        return dict(self._ann_index(name, column, version)[3])
 
     def ann_search(
         self,
@@ -2479,31 +2519,68 @@ class Lagoon:
         where: str | None = None,
         overfetch: int = 4,
     ) -> DataFrame:
-        """Approximate nearest neighbors against a persisted IVF index:
-        pick the query's ``nprobe`` nearest centroids (k-row
-        metadata-sized math), then read ONLY those cells' partition
-        directories of the self-contained index — ix AND vector live
-        there, so the cell filter is pure partition pruning and the
-        source table is never touched (at 100 TB a probe costs
-        ~corpus/k × nprobe bytes of I/O, not a corpus scan) — exact-
-        cosine re-rank, top-k — (ix, cosine), a TakeOrderedAndProject.
-        Raises KeyError if no index was built for this version.
-        Format-1 indexes (no vectors stored) fall back to the corpus
-        join.
+        """Approximate nearest neighbors of ONE query vector against a
+        persisted IVF index: a batch of one,
+        ``ann_search_batch([query_vec], ...)`` — every option, the
+        ``where=`` and ``use_pq`` contracts included, is documented
+        there — returning ``(ix, cosine)`` in rank order. With one
+        query the top-k plans as a TakeOrderedAndProject and the rank
+        window drops out of the plan. Raises KeyError if no index was
+        built for this version."""
+        return self.ann_search_batch(
+            name, column, [query_vec],
+            topk=topk, nprobe=nprobe, version=version, where=where,
+            use_pq=use_pq, rerank_factor=rerank_factor, overfetch=overfetch,
+        ).select("ix", "cosine")
+
+    def ann_search_batch(
+        self,
+        name: str,
+        column: str,
+        query_vecs: "list[list[float]]",
+        *,
+        topk: int = 10,
+        nprobe: int = 4,
+        version: int | None = None,
+        where: str | None = None,
+        use_pq: bool = False,
+        rerank_factor: int | None = None,
+        overfetch: int = 4,
+    ) -> DataFrame:
+        """Approximate nearest neighbors of N query vectors against a
+        persisted IVF index, answered by ONE Spark job.
+
+        Per-query probing costs a fixed driver+scheduling overhead
+        (centroid ranking is trivial; the job round-trip is not), so a
+        retrieval pipeline issuing thousands of queries must batch.
+        The driver ranks centroids per query (N × k small math), then
+        reads ONLY the UNION of probed cells' partition directories of
+        the self-contained index, ONCE — ix AND vector live there, so
+        the cell filter is pure partition pruning and the source table
+        is never touched (at 100 TB a probe costs ~corpus/k × nprobe
+        bytes of I/O, not a corpus scan). The query block crosses the
+        plan as one broadcast N-row frame carrying each query's probe
+        list, candidates are re-ranked by exact cosine, and the
+        per-query top-k is a window PARTITIONED BY query id — parallel,
+        never a single-task sort. Returns (query_id, ix, cosine, rank),
+        query_id = position in ``query_vecs``. Raises KeyError if no
+        index was built for this version. Format-1 indexes (no vectors
+        stored) fall back to the corpus join.
 
         On an IVFADC index (``build_ann_index(pq_m=...)``, format 3)
-        ``use_pq=True`` runs the two-stage pipeline: ADC-shortlist
-        ``topk * rerank_factor`` candidates from the 4-byte codes
-        partitions (Arrow-batched numpy table gather — flat in pq_k),
-        and exact-cosine re-rank only the shortlist rows read back
-        from the sorted vector partitions with an ``ix IN``
-        row-group-pruned scan. PQ is OPT-IN (round-8 verdict #1): the
-        default full-precision probe is exact within the probed cells
-        (measured recall@10 0.99–1.0 at nprobe=4), while ADC recall
-        depends on the corpus's distance margins relative to the
-        quantization error — 0.80–0.88 at the default
-        ``rerank_factor=16`` on margin-rich corpora, arbitrarily low
-        on epsilon-margin near-duplicates. On an index whose build
+        ``use_pq=True`` runs the two-stage pipeline: ONE codes scan of
+        the union cells scores every (query, row) pair Arrow-side and
+        keeps each query's ``topk * rerank_factor`` ADC shortlist; the
+        exact-cosine re-rank then reads only the shortlisted vectors —
+        a driver point read (pyarrow, row-group-pruned), or past the
+        probed-cell size gate a Spark scan with the ``ix IN`` filter
+        pushed to the sorted vector row groups. PQ is OPT-IN (round-8
+        verdict #1): the default full-precision probe is exact within
+        the probed cells (measured recall@10 0.99–1.0 at nprobe=4),
+        while ADC recall depends on the corpus's distance margins
+        relative to the quantization error — 0.80–0.88 at the default
+        ``rerank_factor=16`` on margin-rich corpora, arbitrarily low on
+        epsilon-margin near-duplicates. On an index whose build
         diagnostic flagged that regime (``pq_epsilon_margin_regime``),
         an unpinned ``use_pq=True`` call auto-downgrades to the
         full-precision probe (with a one-shot warning); pass
@@ -2531,84 +2608,51 @@ class Lagoon:
 
         Subqueries in ``where`` are rejected (fail closed): the
         predicate must be row-local."""
-        info = self.catalog.get_source(name, version)
-        self._ann_read_check(info)
-        phys, _h, _t = self.catalog.get_column(info.ix, column)
-        idx_dir = self._ann_index_dir(info, phys)
-        if not os.path.exists(os.path.join(idx_dir, "meta.json")):
-            # content maintenance (dedup_source, streaming versions)
-            # mints new versions that don't inherit the parent's index —
-            # surface WHICH sibling version is indexed so the caller
-            # knows this is a rebuild, not a typo (round-7 verdict #6)
-            hint = ""
-            for v in self.catalog.versions(name):
-                if v == info.version:
-                    continue
-                sib = self.catalog.get_source(name, v)
-                if any(
-                    m.get("column") == phys
-                    for m in self._ann_metas_for_ix(sib.ix)
-                ):
-                    hint = (
-                        f" (v{v} of {name!r} has one — indexes are "
-                        "per-version; rebuild with build_ann_index, or "
-                        "use dedup_source(..., reindex=True))"
-                    )
-                    break
-            raise KeyError(
-                f"no ANN index for {name!r} v{info.version} column "
-                f"{column!r}; run build_ann_index first{hint}"
-            )
-        import json as _json
-
-        with open(os.path.join(idx_dir, "meta.json")) as fh:
-            meta = _json.load(fh)
+        if not query_vecs:
+            raise ValueError("query_vecs is empty")
+        info, phys, idx_dir, meta = self._ann_index(
+            name, column, version, use_pq
+        )
+        use_pq, rerank_factor = self._pq_effective(
+            meta, idx_dir, use_pq, rerank_factor
+        )
         # staleness handling (rebuild reuses the same directories)
         # lives in _ann_centroids: it refreshes Spark's listing caches
         # exactly when the meta identity changes, never per probe
         cents = self._ann_centroids(idx_dir)
-        probe = self._rank_probe_cells(cents, query_vec, nprobe)
-
-        from lagoon_spark.operators.similarity import cosine_topk
+        probe_sets = [
+            self._rank_probe_cells(cents, qv, nprobe) for qv in query_vecs
+        ]
+        union = sorted({c for s in probe_sets for c in s})
 
         ass_root = os.path.join(idx_dir, "assignments")
         # the cell frame is built LAZILY: a driver-tier ADC probe never
         # touches it, and even CONSTRUCTING it pays a footer/schema
         # py4j round-trip per probe
-        _assigns_cache: "list[DataFrame]" = []
+        assigns = functools.cache(lambda: self._read_cells(ass_root, union))
 
-        def assigns_df() -> DataFrame:
-            if not _assigns_cache:
-                _assigns_cache.append(self._read_cells(ass_root, probe))
-            return _assigns_cache[0]
-
-        where_expr, where_in_index, match_ix = self._where_tier(
-            info, assigns_df() if where is not None else None, where
+        where_expr, in_index, match_ix = self._where_tier(
+            info, assigns() if where is not None else None, where
         )
 
-        shortlist_ids: list[int] | None = None
-        if use_pq and meta.get("format") != 3:
-            raise ValueError(
-                "use_pq=True needs an IVFADC index; rebuild with "
-                "build_ann_index(pq_m=...)"
-            )
-        use_pq, rerank_factor = self._pq_effective(
-            meta, idx_dir, use_pq, rerank_factor
-        )
+        shortlists: "dict[int, list[tuple[int, int]]] | None" = None
         if meta.get("format") == 3 and use_pq:
             # an unfilterable shortlist (predicate not in the codes)
             # over-fetches so enough survivors remain after the
             # semi-join to fill topk
             limit = topk * rerank_factor
-            if where_expr is not None and not where_in_index:
+            if where_expr is not None and not in_index:
                 limit *= max(1, overfetch)
-            shortlist = self._pq_shortlist(
-                idx_dir, meta, probe, cents, query_vec,
+            shortlists = self._pq_shortlist_batch(
+                idx_dir, meta, probe_sets, cents, query_vecs,
                 limit=limit,
-                where_expr=where_expr if where_in_index else None,
+                where_expr=where_expr if in_index else None,
             )
-            shortlist_ids = [ix for ix, _c in shortlist]
-            # re-rank tier: the shortlist is ≤ topk·rerank_factor rows
+            pairs = [(q, ix) for q, sl in shortlists.items() for ix, _c in sl]
+            files = self._cell_files(
+                ass_root, {c for sl in shortlists.values() for _ix, c in sl}
+            )
+            # re-rank tier: each shortlist is ≤ topk·rerank_factor rows
             # BY CONSTRUCTION, so fetching their exact vectors is a
             # point read, not a scan — a second Spark job would pay a
             # whole job's scheduling to read a few KB (measured: the
@@ -2618,169 +2662,30 @@ class Lagoon:
             # itself (pyarrow, row-group-pruned); past it — cells too
             # big to touch from the driver — the Spark IN-pushdown job
             # takes over. The gate is on PROBED-CELL bytes: exactly
-            # the quantity that grows with corpus size.
-            if where_expr is None or where_in_index:
-                cell_bytes = 0
-                for c in sorted({c for _ix, c in shortlist}):
-                    d = os.path.join(idx_dir, "assignments", f"cell={c}")
-                    if os.path.isdir(d):
-                        for f in os.scandir(d):
-                            cell_bytes += f.stat().st_size
-                if cell_bytes <= self.ANN_DRIVER_RERANK_MAX_BYTES:
-                    return self._pq_rerank_driver(
-                        idx_dir, shortlist, query_vec, topk
-                    )
-        qdf = self.spark.createDataFrame(
-            [([float(x) for x in query_vec],)], "__vec array<double>"
-        )
-        if "__vec" in assigns_df().columns:  # format 2/3: self-contained
-            candidates = assigns_df()
+            # the quantity that grows with corpus size. An empty
+            # shortlist (all probed cells empty) is the driver tier's
+            # empty answer whatever the gate.
+            if not pairs or (
+                (where_expr is None or in_index)
+                and sum(map(os.path.getsize, files))
+                <= self.ANN_DRIVER_RERANK_MAX_BYTES
+            ):
+                return self._pq_rerank_driver_batch(
+                    files, shortlists, query_vecs, topk
+                )
+
+        from lagoon_spark.operators.similarity import cosine_to
+
+        if "__vec" in assigns().columns:  # format 2/3: self-contained
+            candidates = assigns()
         else:  # format-1 artifact: vectors still live in the source
-            candidates = self._ann_vectors(info, phys).join(
-                assigns_df(), "ix"
-            )
+            candidates = self._ann_vectors(info, phys).join(assigns(), "ix")
         if where_expr is not None:
-            if where_in_index:
+            if in_index:
                 # lands in the probed-cell parquet scan (pushed filter)
                 candidates = candidates.filter(where_expr)
             else:
                 candidates = candidates.join(match_ix, "ix", "semi")
-        if shortlist_ids is not None:
-            # IN-literal filter pushes down to the sorted vector
-            # row groups — the re-rank reads a few groups, not the cells.
-            # An empty shortlist (all probed cells empty) means zero
-            # candidates — make that explicit rather than `IN ()`
-            candidates = (
-                candidates.filter(F.col("ix").isin(shortlist_ids))
-                if shortlist_ids
-                else candidates.filter(F.lit(False))
-            )
-        return cosine_topk(candidates, "ix", "__vec", qdf, k=topk)
-
-    def ann_search_batch(
-        self,
-        name: str,
-        column: str,
-        query_vecs: "list[list[float]]",
-        *,
-        topk: int = 10,
-        nprobe: int = 4,
-        version: int | None = None,
-        where: str | None = None,
-        use_pq: bool = False,
-        rerank_factor: int | None = None,
-        overfetch: int = 4,
-    ) -> DataFrame:
-        """Batched ANN: N query vectors answered by ONE Spark job.
-
-        Per-query probing costs a fixed driver+scheduling overhead
-        (centroid ranking is trivial; the job round-trip is not), so a
-        retrieval pipeline issuing thousands of queries must batch.
-        The driver ranks centroids per query (N × k small math), the
-        UNION of probed cell directories is read ONCE (partition
-        pruning — still never the source table), the query block
-        crosses the plan as one broadcast N-row frame carrying each
-        query's probe list, and the per-query top-k is a window
-        PARTITIONED BY query id — parallel, never a single-task sort.
-        Returns (query_id, ix, cosine, rank), query_id = position in
-        ``query_vecs``.
-
-        ``where`` behaves exactly as in :meth:`ann_search` (evaluated
-        inside the cells when index-resident, source semi-join
-        otherwise). ``use_pq=True`` (format-3 index) runs the batched
-        IVFADC pipeline: ONE codes scan of the union cells scores
-        every (query, row) pair Arrow-side, a window per query keeps
-        the topk·rerank_factor shortlist, and the exact re-rank is one
-        driver point read of all shortlisted vectors (the Spark
-        pairs-join tier past the probed-cell size gate) — the probe
-        reads dim·8/pq_m× fewer candidate bytes than the
-        full-precision batch."""
-        if not query_vecs:
-            raise ValueError("query_vecs is empty")
-        info = self.catalog.get_source(name, version)
-        self._ann_read_check(info)
-        phys, _h, _t = self.catalog.get_column(info.ix, column)
-        idx_dir = self._ann_index_dir(info, phys)
-        if not os.path.exists(os.path.join(idx_dir, "meta.json")):
-            raise KeyError(
-                f"no ANN index for {name!r} v{info.version} column "
-                f"{column!r}; run build_ann_index first"
-            )
-        import json as _json
-
-        with open(os.path.join(idx_dir, "meta.json")) as fh:
-            meta = _json.load(fh)
-        if use_pq and meta.get("format") != 3:
-            raise ValueError(
-                "use_pq=True needs an IVFADC index; rebuild with "
-                "build_ann_index(pq_m=...)"
-            )
-        use_pq, rerank_factor = self._pq_effective(
-            meta, idx_dir, use_pq, rerank_factor
-        )
-        cents = self._ann_centroids(idx_dir)
-        probe_sets = [
-            self._rank_probe_cells(cents, qv, nprobe) for qv in query_vecs
-        ]
-        union = sorted({c for s in probe_sets for c in s})
-
-        ass_root = os.path.join(idx_dir, "assignments")
-        assigns = self._read_cells(ass_root, union)
-        if "__vec" in assigns.columns:  # format 2/3: self-contained
-            candidates = assigns
-        else:  # format-1 artifact: vectors still live in the source
-            candidates = self._ann_vectors(info, phys).join(assigns, "ix")
-
-        where_expr, in_index, match_ix = self._where_tier(
-            info, assigns, where
-        )
-        if where_expr is not None:
-            if in_index:
-                candidates = candidates.filter(where_expr)
-            else:
-                candidates = candidates.join(match_ix, "ix", "semi")
-
-        shortlists: "dict[int, list[tuple[int, int]]] | None" = None
-        if meta.get("format") == 3 and use_pq:
-            limit = topk * rerank_factor
-            if where_expr is not None and not in_index:
-                limit *= max(1, overfetch)
-            shortlists = self._pq_shortlist_batch(
-                idx_dir, meta, probe_sets, cents, query_vecs,
-                limit=limit,
-                where_expr=where_expr if in_index else None,
-            )
-            if where is None or in_index:
-                cell_bytes = 0
-                cells_hit = {
-                    c for sl in shortlists.values() for _ix, c in sl
-                }
-                for c in sorted(cells_hit):
-                    d = os.path.join(ass_root, f"cell={c}")
-                    if os.path.isdir(d):
-                        for f in os.scandir(d):
-                            cell_bytes += f.stat().st_size
-                if cell_bytes <= self.ANN_DRIVER_RERANK_MAX_BYTES:
-                    return self._pq_rerank_driver_batch(
-                        idx_dir, shortlists, query_vecs, topk
-                    )
-            # Spark tier: each candidate re-ranks ONLY for the queries
-            # that shortlisted it — a broadcast (query_id, ix) pairs
-            # join replaces the cell-membership theta join
-            pairs = self.spark.createDataFrame(
-                [
-                    (qid, int(ix))
-                    for qid, sl in shortlists.items()
-                    for ix, _c in sl
-                ]
-                or [(None, None)],
-                "query_id int, ix long",
-            ).filter(F.col("ix").isNotNull())
-
-        from pyspark.sql import Window as W
-
-        from lagoon_spark.operators.similarity import cosine_to
-
         qdf = self.spark.createDataFrame(
             [
                 (i, [float(x) for x in qv], probe_sets[i])
@@ -2791,18 +2696,18 @@ class Lagoon:
         # each candidate row matches only the queries whose probe list
         # holds its cell — a broadcast theta join over the tiny query
         # block, never a full cross product against the corpus. On the
-        # ADC tier the pairing is exact: the shortlist's (query_id, ix)
-        # pairs, with the IN-literal pushed to the vector row groups.
+        # ADC tier the pairing is exact: each candidate re-ranks ONLY
+        # for the queries that shortlisted it — a broadcast (query_id,
+        # ix) pairs join, with the IN-literal pushed to the sorted
+        # vector row groups, so the re-rank reads a few groups, not
+        # the cells.
         if shortlists is not None:
-            all_ids = sorted(
-                {int(ix) for sl in shortlists.values() for ix, _c in sl}
-            )
+            ids = sorted({ix for _q, ix in pairs})
+            pairs_df = self.spark.createDataFrame(pairs, "query_id int, ix long")
             joined = (
-                candidates.filter(F.col("ix").isin(all_ids))
-                if all_ids
-                else candidates.filter(F.lit(False))
-            ).join(F.broadcast(pairs), "ix").join(
-                F.broadcast(qdf.drop("__cells")), "query_id"
+                candidates.filter(F.col("ix").isin(ids))
+                .join(F.broadcast(pairs_df), "ix")
+                .join(F.broadcast(qdf.drop("__cells")), "query_id")
             )
         else:
             joined = candidates.join(
@@ -2813,12 +2718,29 @@ class Lagoon:
             "ix",
             F.round(cosine_to("__vec", "__qvec"), 9).alias("cosine"),
         )
-        w = W.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), F.col("ix").asc()
-        )
-        return scored.withColumn(
-            "rank", F.row_number().over(w).cast("long")
-        ).filter(F.col("rank") <= topk)
+        return self._topk_per_query(scored, "cosine", topk, len(query_vecs))
+
+    @staticmethod
+    def _topk_per_query(
+        df: DataFrame, score: str, k: int, n_queries: int, rank: str = "rank"
+    ) -> DataFrame:
+        """Each query's ``k`` best rows of ``df`` by ``score`` desc then
+        ``ix`` asc, numbered 1..k in a long ``rank`` column by a window
+        partitioned by ``query_id``. Many queries filter the window.
+        One query takes ``orderBy(...).limit(k)`` first, a
+        TakeOrderedAndProject: its single output partition already
+        satisfies the window's distribution (no exchange), and a caller
+        that drops ``rank`` lets Catalyst prune the window entirely —
+        the N=1 probe keeps the single-query plan's cost."""
+        from pyspark.sql import Window as W
+
+        order = [F.col(score).desc(), F.col("ix").asc()]
+        numbered = F.row_number().over(
+            W.partitionBy("query_id").orderBy(*order)
+        ).cast("long")
+        if n_queries == 1:
+            return df.orderBy(*order).limit(k).withColumn(rank, numbered)
+        return df.withColumn(rank, numbered).filter(F.col(rank) <= k)
 
     def _read_cells(self, root: str, cells: "list[int]") -> DataFrame:
         """Rows of the ANN artifact at ``root`` in ``cells``. Lists only
@@ -2834,12 +2756,24 @@ class Lagoon:
         ]
         return self._read_table(root, *dirs).filter(F.col("cell").isin(cells))
 
+    @staticmethod
+    def _cell_files(root: str, cells) -> "list[str]":
+        """The parquet part files of ``cells`` under the ANN artifact
+        at ``root``, for a driver-side pyarrow read."""
+        return [
+            os.path.join(d, f)
+            for c in sorted(cells)
+            if os.path.isdir(d := os.path.join(root, f"cell={c}"))
+            for f in sorted(os.listdir(d))
+            if f.endswith(".parquet") and not f.startswith((".", "_"))
+        ]
+
     def _rank_probe_cells(
         self, cents, query_vec: "list[float]", nprobe: int
     ) -> "list[int]":
         """The query's ``nprobe`` nearest centroids by cosine (driver
         math over the k-row centroid table; ties break to the lowest
-        cell) — shared by the single and batched probe paths."""
+        cell)."""
         import math
 
         def cos(a: "list[float]", b: "list[float]") -> float:
@@ -2855,8 +2789,9 @@ class Lagoon:
         return [int(r["cell"]) for r in ranked[:nprobe]]
 
     def _where_tier(self, info, assigns: DataFrame, where: "str | None"):
-        """The hybrid-search ``where=`` contract, shared by the single
-        and batched paths: returns ``(where_expr, in_index, match_ix)``.
+        """The hybrid-search ``where=`` contract of
+        :meth:`ann_search_batch`: returns ``(where_expr, in_index,
+        match_ix)``.
         Rejects subqueries (fail closed), dispatches by the predicate's
         parsed column references (index-resident → filter inside the
         cells; otherwise one column-pruned source pass whose matching
@@ -3006,80 +2941,6 @@ class Lagoon:
         self._book_cache[idx_dir] = (key, books)
         return books
 
-    def _pq_rerank_driver(
-        self,
-        idx_dir: str,
-        shortlist: "list[tuple[int, int]]",
-        query_vec: "list[float]",
-        topk: int,
-    ) -> DataFrame:
-        """Exact-cosine re-rank of an ADC shortlist as a DRIVER point
-        read. The shortlist is ≤ topk·rerank_factor ``(ix, cell)``
-        pairs; their exact vectors are fetched with pyarrow from ONLY
-        the cells the ids live in (``ix`` is the files' sort key, so
-        the ``isin`` filter prunes row groups by stats before any
-        decode). Spark-job scheduling would dominate a read this size
-        at any corpus scale — the size gate in :meth:`ann_search`
-        keeps the driver away from cells too big to touch locally.
-
-        Bit-parity with :func:`cosine_topk`: the dot/norm folds run in
-        the same sequential order as the JVM ``aggregate`` expression
-        (IEEE doubles associate identically step-for-step), and the
-        cosine is rounded HALF_UP to 9 places like Spark's ``ROUND``
-        before the (-cosine, ix) ordering — the two re-rank tiers
-        return the same rows in the same order (including Spark's
-        NaN-is-largest ordering for zero-norm vectors)."""
-        import math
-
-        def _values_df(rows: "list[tuple[int, float]]") -> DataFrame:
-            # a VALUES LocalRelation, NOT createDataFrame: the latter
-            # parallelizes into an RDD, so the caller's .collect()
-            # launches a real Spark job — measured 0.55 s to fetch ten
-            # driver-resident rows, half the probe budget. VALUES
-            # collects driver-only (LocalTableScan).
-            if not rows:
-                return self.spark.sql(
-                    "SELECT * FROM (VALUES (CAST(0 AS BIGINT), "
-                    "CAST(0.0 AS DOUBLE))) AS t(ix, cosine) LIMIT 0"
-                )
-            vals = ",".join(
-                f"(CAST({ix} AS BIGINT), {_double_lit(cos)})"
-                for ix, cos in rows
-            )
-            return self.spark.sql(
-                f"SELECT * FROM (VALUES {vals}) AS t(ix, cosine)"
-            )
-
-        if not shortlist:
-            return _values_df([])
-        import pyarrow.dataset as ds
-
-        want = {int(ix) for ix, _c in shortlist}
-        files = []
-        for c in sorted({c for _ix, c in shortlist}):
-            d = os.path.join(idx_dir, "assignments", f"cell={c}")
-            if os.path.isdir(d):
-                files += [
-                    os.path.join(d, f)
-                    for f in sorted(os.listdir(d))
-                    if f.endswith(".parquet") and not f.startswith((".", "_"))
-                ]
-        if not files:
-            return _values_df([])
-        tbl = ds.dataset(files, format="parquet").to_table(
-            columns=["ix", "__vec"],
-            filter=ds.field("ix").isin(sorted(want)),
-        )
-        qn = math.sqrt(_seq_fold_sq(query_vec))
-        out = [
-            (int(ix), _exact_cosine(vec, query_vec, qn))
-            for ix, vec in zip(
-                tbl.column("ix").to_pylist(), tbl.column("__vec").to_pylist()
-            )
-        ]
-        out.sort(key=_desc_nulls_last_key)
-        return _values_df(out[:topk])
-
     def _pq_shortlist_batch(
         self,
         idx_dir: str,
@@ -3091,46 +2952,57 @@ class Lagoon:
         limit: int,
         where_expr=None,
     ) -> "dict[int, list[tuple[int, int]]]":
-        """Batched ADC stage: ONE codes scan of the union cells scores
+        """ADC stage of an IVFADC probe: shortlist candidate row ids
+        from the codes partitions, by APPROXIMATE COSINE.
+
+        ``cos(q, v) ≈ (q·c_cell + Σ_j <q_j, book_j[code_j]>) / (‖q‖‖v‖)``
+        — the asymmetric inner product against the PQ-reconstructed
+        vector (coarse centroid + coded residual) over the EXACT norm
+        stored beside the codes; ``‖q‖`` is constant per query and
+        drops out of the ordering. Driver math per query: ONE set of
+        pq_m × pq_k dot-product tables (cell-independent — codebooks
+        quantize residuals globally) plus nprobe q·c_cell scalars in a
+        map keyed by cell. ONE codes scan of the union cells scores
         every (query, candidate) pair — the per-query tables
         (n_q × pq_m × pq_k doubles) ride the closure and the scoring
-        is a numpy gather per query over each Arrow batch — and a
-        window per query keeps the ``limit`` best. Returns
-        {query_id: [(ix, cell), ...]}."""
+        is a numpy gather per query over each Arrow batch — and the
+        per-query top-k keeps the ``limit`` best. Returns
+        {query_id: [(ix, cell), ...]} — metadata-sized BY CONSTRUCTION
+        — which become the re-rank's point-read set (driver tier) or
+        pushed-down IN filter (Spark tier)."""
         import numpy as _np
 
         m = int(meta["pq_m"])
         pq_k = int(meta["pq_k"])
         dim = int(meta["dim"])
         sub = dim // m
-        books = self._ann_codebooks(idx_dir)
-        book = {}
-        for r in books:
-            book[(int(r["subspace"]), int(r["code"]))] = list(r["centroid"])
-        cent_by_cell = {
-            int(r["cell"]): list(r["centroid"]) for r in ranked_cents
-        }
+        book = _np.empty((m, pq_k, sub), dtype="float64")
+        for r in self._ann_codebooks(idx_dir):  # m*k rows, driver-cached
+            book[int(r["subspace"]), int(r["code"])] = r["centroid"]
+        cent_by_cell = {int(r["cell"]): r["centroid"] for r in ranked_cents}
         n_q = len(query_vecs)
         tabs = _np.empty((n_q, m, pq_k), dtype="float64")
         qdotc: "list[dict[int, float]]" = []
-        probe_of: "list[set[int]]" = [set(s) for s in probe_sets]
         for qi, q in enumerate(query_vecs):
             qv = _np.asarray(q, dtype="float64")
             for j in range(m):
-                qs = qv[j * sub : (j + 1) * sub]
                 for c in range(pq_k):
-                    tabs[qi, j, c] = float(
-                        _np.dot(qs, _np.asarray(book[(j, c)]))
-                    )
+                    tabs[qi, j, c] = _np.dot(qv[j * sub : (j + 1) * sub], book[j, c])
             qdotc.append(
                 {
-                    int(cell): float(
-                        _np.dot(qv, _np.asarray(cent_by_cell[cell]))
-                    )
+                    int(cell): float(_np.dot(qv, _np.asarray(cent_by_cell[cell])))
                     for cell in probe_sets[qi]
                 }
             )
 
+        # Scoring runs as an Arrow-batched numpy gather (mapInPandas):
+        # the earlier JVM-expression forms put the m·pq_k table INTO THE
+        # PLAN as literals — a chained per-cell CASE measured 14 s/probe
+        # at nprobe=16, and even the create_map + element_at form paid
+        # 4.1–4.5 s/probe at pq_k=256, pure expression-build + codegen
+        # cost growing with pq_k. numpy's fancy-indexed table lookup is
+        # O(rows·m) with zero plan growth — flat in pq_k and nprobe —
+        # and ships only the per-query tables in the closure.
         def _score(batches):
             import numpy as np
             import pandas as pd
@@ -3168,196 +3040,6 @@ class Lagoon:
                     yield pd.concat(outs, ignore_index=True)
 
         codes_root = os.path.join(idx_dir, "codes")
-        union = sorted({c for s in probe_sets for c in s})
-        dirs = [
-            d
-            for c in union
-            if os.path.isdir(d := os.path.join(codes_root, f"cell={c}"))
-        ]
-        out: "dict[int, list[tuple[int, int]]]" = {
-            qi: [] for qi in range(n_q)
-        }
-        if not dirs:
-            return out
-        codes = self._read_table(codes_root, *dirs).filter(
-            F.col("cell").isin(union)
-        )
-        if where_expr is not None:
-            codes = codes.filter(where_expr)
-        from pyspark.sql import Window as W
-
-        scored = codes.select("ix", "cell", "codes", "__norm").mapInPandas(
-            _score, "query_id int, ix long, cell int, __adc double"
-        )
-        w = W.partitionBy("query_id").orderBy(
-            F.col("__adc").desc(), F.col("ix").asc()
-        )
-        rows = (
-            scored.withColumn("__r", F.row_number().over(w))
-            .filter(F.col("__r") <= limit)
-            .collect()
-        )
-        for r in rows:
-            out[int(r["query_id"])].append((int(r["ix"]), int(r["cell"])))
-        return out
-
-    def _pq_rerank_driver_batch(
-        self,
-        idx_dir: str,
-        shortlists: "dict[int, list[tuple[int, int]]]",
-        query_vecs: "list[list[float]]",
-        topk: int,
-    ) -> DataFrame:
-        """Batched exact re-rank as ONE driver point read: every
-        shortlisted vector is fetched once (pyarrow, row-group-pruned
-        over the union of shortlist cells), then each query re-ranks
-        its own shortlist with the bit-parity cosine fold. Returns the
-        batch schema (query_id, ix, cosine, rank)."""
-        import math
-
-        def _values_df(rows) -> DataFrame:
-            if not rows:
-                return self.spark.sql(
-                    "SELECT * FROM (VALUES (CAST(0 AS INT), "
-                    "CAST(0 AS BIGINT), CAST(0.0 AS DOUBLE), "
-                    "CAST(0 AS BIGINT))) AS t(query_id, ix, cosine, rank) "
-                    "LIMIT 0"
-                )
-            vals = ",".join(
-                f"(CAST({qid} AS INT), CAST({ix} AS BIGINT), "
-                f"{_double_lit(cos)}, CAST({rk} AS BIGINT))"
-                for qid, ix, cos, rk in rows
-            )
-            return self.spark.sql(
-                f"SELECT * FROM (VALUES {vals}) "
-                "AS t(query_id, ix, cosine, rank)"
-            )
-
-        want = sorted(
-            {int(ix) for sl in shortlists.values() for ix, _c in sl}
-        )
-        if not want:
-            return _values_df([])
-        import pyarrow.dataset as ds
-
-        files = []
-        for c in sorted(
-            {c for sl in shortlists.values() for _ix, c in sl}
-        ):
-            d = os.path.join(idx_dir, "assignments", f"cell={c}")
-            if os.path.isdir(d):
-                files += [
-                    os.path.join(d, f)
-                    for f in sorted(os.listdir(d))
-                    if f.endswith(".parquet") and not f.startswith((".", "_"))
-                ]
-        if not files:
-            return _values_df([])
-        tbl = ds.dataset(files, format="parquet").to_table(
-            columns=["ix", "__vec"], filter=ds.field("ix").isin(want)
-        )
-        vecs = dict(
-            zip(tbl.column("ix").to_pylist(), tbl.column("__vec").to_pylist())
-        )
-        rows = []
-        for qid in sorted(shortlists):
-            q = query_vecs[qid]
-            qn = math.sqrt(_seq_fold_sq(q))
-            scored = []
-            for ix, _c in shortlists[qid]:
-                vec = vecs.get(int(ix))
-                if vec is None:
-                    continue
-                scored.append((int(ix), _exact_cosine(vec, q, qn)))
-            scored.sort(key=_desc_nulls_last_key)
-            for rk, (ix, cos) in enumerate(scored[:topk], start=1):
-                rows.append((qid, ix, cos, rk))
-        return _values_df(rows)
-
-    def _pq_shortlist(
-        self,
-        idx_dir: str,
-        meta: dict,
-        probe: list[int],
-        ranked_cents,
-        query_vec: list[float],
-        *,
-        limit: int,
-        where_expr=None,
-    ) -> "list[tuple[int, int]]":
-        """ADC stage of an IVFADC probe: shortlist candidate row ids
-        from the codes partitions, by APPROXIMATE COSINE.
-
-        ``cos(q, v) ≈ (q·c_cell + Σ_j <q_j, book_j[code_j]>) / (‖q‖‖v‖)``
-        — the asymmetric inner product against the PQ-reconstructed
-        vector (coarse centroid + coded residual) over the EXACT norm
-        stored beside the codes; ``‖q‖`` is constant per query and
-        drops out of the ordering. Driver math per query: ONE set of
-        pq_m × pq_k dot-product tables (cell-independent — codebooks
-        quantize residuals globally) plus nprobe q·c_cell scalars in a
-        map keyed by cell. Returns ``limit`` ``(ix, cell)`` pairs —
-        metadata-sized BY CONSTRUCTION — which become the re-rank's
-        point-read set (driver tier) or pushed-down IN filter (Spark
-        tier)."""
-        m = int(meta["pq_m"])
-        pq_k = int(meta["pq_k"])
-        dim = int(meta["dim"])
-        sub = dim // m
-        books = self._ann_codebooks(idx_dir)  # m*k rows, driver-cached
-        book = {}
-        for r in books:
-            book[(int(r["subspace"]), int(r["code"]))] = list(r["centroid"])
-        cent_by_cell = {
-            int(r["cell"]): list(r["centroid"]) for r in ranked_cents
-        }
-        q = [float(x) for x in query_vec]
-        # the per-subspace ADC tables <q_j, book_j[c]> are CELL-
-        # INDEPENDENT (codebooks are global over residuals); only the
-        # q·c_cell scalar varies per probed cell. Scoring runs as an
-        # Arrow-batched numpy gather (mapInPandas): the earlier
-        # JVM-expression forms put the m·pq_k table INTO THE PLAN as
-        # literals — a chained per-cell CASE measured 14 s/probe at
-        # nprobe=16, and even the create_map + element_at form paid
-        # 4.1–4.5 s/probe at pq_k=256, pure expression-build + codegen
-        # cost growing with pq_k. numpy's fancy-indexed table lookup is
-        # O(rows·m) with zero plan growth — flat in pq_k and nprobe —
-        # and ships only the per-query table (m·pq_k doubles) in the
-        # closure.
-        import numpy as _np
-
-        qv = _np.asarray(q, dtype="float64")
-        tab = _np.empty((m, pq_k), dtype="float64")
-        for j in range(m):
-            qs = qv[j * sub : (j + 1) * sub]
-            for c in range(pq_k):
-                tab[j, c] = float(_np.dot(qs, _np.asarray(book[(j, c)])))
-        qdotc = {
-            int(cell): float(_np.dot(qv, _np.asarray(cent_by_cell[cell])))
-            for cell in probe
-        }
-
-        def _adc_score(batches):
-            import numpy as np
-            import pandas as pd
-
-            offs = np.arange(tab.shape[0])
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                cm = np.vstack(pdf["codes"].to_numpy()).astype("int64")
-                num = tab[offs[None, :], cm].sum(axis=1)
-                num = num + pdf["cell"].map(qdotc).to_numpy(dtype="float64")
-                nrm = pdf["__norm"].to_numpy(dtype="float64")
-                s = np.where(nrm > 0, num / nrm, -1e300)
-                yield pd.DataFrame(
-                    {
-                        "ix": pdf["ix"].to_numpy(),
-                        "cell": pdf["cell"].to_numpy(),
-                        "__adc": s,
-                    }
-                )
-
-        codes_root = os.path.join(idx_dir, "codes")
         if not os.path.isdir(codes_root):
             # meta says format 3 (PQ) but the codes artifact is gone —
             # a partially deleted/corrupt index. Fail loudly instead of
@@ -3369,33 +3051,97 @@ class Lagoon:
                 "missing; rebuild the index (build_ann_index or "
                 "dedup_source(reindex=True))"
             )
-        dirs = [
-            d
-            for c in probe
-            if os.path.isdir(d := os.path.join(codes_root, f"cell={c}"))
-        ]
-        if dirs:
-            codes = self._read_table(codes_root, *dirs).filter(
-                F.col("cell").isin(probe)
-            )
-        else:
-            # probed cells were all empty at build time (no cell dirs):
-            # an empty shortlist is the *correct* answer — no candidates
-            # live in the probed cells
-            return []
+        out: "dict[int, list[tuple[int, int]]]" = {
+            qi: [] for qi in range(n_q)
+        }
+        codes = self._read_cells(
+            codes_root, sorted({c for s in probe_sets for c in s})
+        )
         if where_expr is not None:
             # hybrid search: include columns ride in the codes
             # partitions, so the shortlist itself honors the predicate
             # (no over-fetch, no post-filter under-retrieval)
             codes = codes.filter(where_expr)
+        scored = codes.select("ix", "cell", "codes", "__norm").mapInPandas(
+            _score, "query_id int, ix long, cell int, __adc double"
+        )
         rows = (
-            codes.select("ix", "cell", "codes", "__norm")
-            .mapInPandas(_adc_score, "ix long, cell int, __adc double")
-            .orderBy(F.col("__adc").desc(), F.col("ix").asc())
-            .limit(limit)
+            self._topk_per_query(scored, "__adc", limit, n_q, "__r")
+            .select("query_id", "ix", "cell")
             .collect()
         )
-        return [(int(r["ix"]), int(r["cell"])) for r in rows]
+        for r in rows:
+            out[int(r["query_id"])].append((int(r["ix"]), int(r["cell"])))
+        return out
+
+    def _pq_rerank_driver_batch(
+        self,
+        files: "list[str]",
+        shortlists: "dict[int, list[tuple[int, int]]]",
+        query_vecs: "list[list[float]]",
+        topk: int,
+    ) -> DataFrame:
+        """Exact-cosine re-rank of the ADC shortlists as ONE DRIVER
+        point read. Each shortlist is ≤ topk·rerank_factor ``(ix,
+        cell)`` pairs; every shortlisted vector is fetched once with
+        pyarrow from ``files``, ONLY the cells the ids live in (``ix`` is
+        the files' sort key, so the ``isin`` filter prunes row groups by
+        stats before any decode), then each query re-ranks its own
+        shortlist. Spark-job scheduling would dominate a read this size
+        at any corpus scale — the size gate in :meth:`ann_search_batch`
+        keeps the driver away from cells too big to touch locally.
+        Returns the batch schema (query_id, ix, cosine, rank).
+
+        Bit-parity with the Spark tier (:func:`cosine_to`): the
+        dot/norm folds run in the same sequential order as the JVM
+        ``aggregate`` expression (IEEE doubles associate identically
+        step-for-step), and the cosine is rounded HALF_UP to 9 places
+        like Spark's ``ROUND`` before the (-cosine, ix) ordering — the
+        two re-rank tiers return the same rows in the same order
+        (including Spark's NaN-is-largest ordering for zero-norm
+        vectors)."""
+        import math
+
+        import pyarrow.dataset as ds
+
+        vecs = {}
+        if files:
+            want = sorted({ix for sl in shortlists.values() for ix, _c in sl})
+            tbl = ds.dataset(files, format="parquet").to_table(
+                columns=["ix", "__vec"], filter=ds.field("ix").isin(want)
+            )
+            vecs = dict(
+                zip(tbl.column("ix").to_pylist(), tbl.column("__vec").to_pylist())
+            )
+        rows = []
+        for qid in sorted(shortlists):
+            q = query_vecs[qid]
+            qn = math.sqrt(_seq_fold_sq(q))
+            scored = sorted(
+                (
+                    (ix, _exact_cosine(vecs[ix], q, qn))
+                    for ix, _c in shortlists[qid]
+                    if ix in vecs
+                ),
+                key=_desc_nulls_last_key,
+            )
+            for rk, (ix, cos) in enumerate(scored[:topk], start=1):
+                rows.append((qid, ix, cos, rk))
+        # a VALUES LocalRelation, NOT createDataFrame: the latter
+        # parallelizes into an RDD, so the caller's .collect() launches
+        # a real Spark job — measured 0.55 s to fetch ten driver-resident
+        # rows, half the probe budget. VALUES collects driver-only
+        # (LocalTableScan); the LIMIT drops the placeholder row that
+        # types an empty result.
+        vals = ",".join(
+            f"(CAST({qid} AS INT), CAST({ix} AS BIGINT), "
+            f"{_double_lit(cos)}, CAST({rk} AS BIGINT))"
+            for qid, ix, cos, rk in rows or [(0, 0, 0.0, 0)]
+        )
+        return self.spark.sql(
+            f"SELECT * FROM (VALUES {vals}) "
+            f"AS t(query_id, ix, cosine, rank) LIMIT {len(rows)}"
+        )
 
     # -- content maintenance: near-dup dedup as a new version ----------------
 

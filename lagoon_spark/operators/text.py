@@ -147,6 +147,53 @@ def word_fingerprints(col: str, mod: int = MOD, mult: int = MULT) -> Column:
 WEIGHTS_LITERAL_MAX_F = 50_000
 
 
+def _weight_lookup(
+    weights: "list[float] | None", weights_col: "str | None"
+) -> str:
+    """SQL for the weight of fingerprint ``f``: read from the
+    ``weights_col`` array column, else from ``weights`` embedded as a
+    literal array, else the deterministic pseudo-table."""
+    if weights_col is not None:
+        return (
+            f"element_at({weights_col}, "
+            f"CAST(f % size({weights_col}) AS INT) + 1)"
+        )
+    if weights is None:
+        return "(CAST(f % 2001 AS DOUBLE) - 1000.0) / 1000.0"
+    arr = ", ".join(f"CAST({float(w)!r} AS DOUBLE)" for w in weights)
+    return f"element_at(array({arr}), CAST(f % {len(weights)} AS INT) + 1)"
+
+
+def packed_weights(
+    spark,
+    weights: "list[float] | None",
+    weights_df: "DataFrame | None",
+) -> "DataFrame | None":
+    """The weight-carrier tier: ``None`` when the table embeds as a plan
+    literal (no ``weights_df`` and F ≤ ``WEIGHTS_LITERAL_MAX_F``),
+    otherwise ONE row with the table packed as ``__weights
+    array<double>`` for a broadcast join. ``weights_df`` is either the
+    packed one-column form or a (bin, weight)-shaped table, packed by
+    bin order without touching the driver."""
+    if weights_df is None and (
+        weights is None or len(weights) <= WEIGHTS_LITERAL_MAX_F
+    ):
+        return None
+    if weights_df is None:
+        return spark.createDataFrame(
+            [([float(w) for w in weights],)], "__weights array<double>"
+        )
+    if len(weights_df.columns) == 1:
+        return weights_df.select(F.col(weights_df.columns[0]).alias("__weights"))
+    b, w = weights_df.columns[:2]
+    return weights_df.groupBy().agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct(F.col(b), F.col(w)))),
+            lambda s: s[w].cast("double"),
+        ).alias("__weights")
+    )
+
+
 def hashed_linear_score(
     col: str,
     mod: int = MOD,
@@ -182,16 +229,7 @@ def hashed_linear_score(
     wins when both are given.
     """
     fps = word_fingerprints(col, mod, mult)
-    if weights_col is not None:
-        lookup = (
-            f"element_at({weights_col}, "
-            f"CAST(f % size({weights_col}) AS INT) + 1)"
-        )
-    elif weights is None:
-        lookup = "(CAST(f % 2001 AS DOUBLE) - 1000.0) / 1000.0"
-    else:
-        arr = ", ".join(f"CAST({float(w)!r} AS DOUBLE)" for w in weights)
-        lookup = f"element_at(array({arr}), CAST(f % {len(weights)} AS INT) + 1)"
+    lookup = _weight_lookup(weights, weights_col)
     sum_w = F.expr(
         f"aggregate(transform(filter(split({col}, ' '), w -> w <> ''), "
         f"w -> aggregate(transform(sequence(1, length(w)), "
@@ -227,16 +265,7 @@ def hashed_score_struct(
     struct through a generator barrier before extracting fields.
     Score doubles are bit-identical (same fold, same order, same
     rounding)."""
-    if weights_col is not None:
-        lookup = (
-            f"element_at({weights_col}, "
-            f"CAST(f % size({weights_col}) AS INT) + 1)"
-        )
-    elif weights is None:
-        lookup = "(CAST(f % 2001 AS DOUBLE) - 1000.0) / 1000.0"
-    else:
-        arr = ", ".join(f"CAST({float(w)!r} AS DOUBLE)" for w in weights)
-        lookup = f"element_at(array({arr}), CAST(f % {len(weights)} AS INT) + 1)"
+    lookup = _weight_lookup(weights, weights_col)
     return F.expr(
         f"element_at(transform(array("
         f"transform(filter(split({col}, ' '), w -> w <> ''), "
@@ -281,25 +310,10 @@ def with_hashed_linear_score(
     with more than the packed row. Both tiers stay Python-free and
     shuffle-free over the corpus (a broadcast exchange ships the row;
     the corpus itself never moves)."""
-    if weights_df is None and (
-        weights is None or len(weights) <= WEIGHTS_LITERAL_MAX_F
-    ):
+    one = packed_weights(df.sparkSession, weights, weights_df)
+    if one is None:
         return df.withColumn(
             out_col, hashed_linear_score(col, mod, mult, weights=weights)
-        )
-    if weights_df is None:
-        one = df.sparkSession.createDataFrame(
-            [([float(w) for w in weights],)], "__weights array<double>"
-        )
-    elif len(weights_df.columns) == 1:
-        one = weights_df.select(F.col(weights_df.columns[0]).alias("__weights"))
-    else:
-        b, w = weights_df.columns[:2]
-        one = weights_df.groupBy().agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct(F.col(b), F.col(w)))),
-                lambda s: s[w].cast("double"),
-            ).alias("__weights")
         )
     return (
         df.join(F.broadcast(one))

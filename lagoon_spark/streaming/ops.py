@@ -477,7 +477,7 @@ def quality_gate(
     and passed through a generator barrier (``explode`` of a one-element
     array), so the per-token rolling-hash fold runs once; the filter and
     the output read the struct's fields. The weight-table tiering is
-    inlined here, with the same thresholds as
+    :func:`text.packed_weights`, shared with
     :func:`text.with_hashed_linear_score`: no ``weights`` uses the
     deterministic pseudo-table, and up to ``WEIGHTS_LITERAL_MAX_F``
     coefficients embed in the expression as a literal array; past
@@ -486,39 +486,18 @@ def quality_gate(
     through ``weights_col``, never as expression text, so a
     millions-of-bins production table serves in the same streaming
     plan."""
-    from lagoon_spark.operators.text import (
-        WEIGHTS_LITERAL_MAX_F,
-        hashed_score_struct,
-    )
+    from lagoon_spark.operators.text import hashed_score_struct, packed_weights
 
     # score + token count as ONE let-bound struct materialized through
     # a generator barrier: the round-12 plan ran the per-token rolling-
     # hash fold 6× per row (score guard / sum / mean divisor, doubled
     # again by the pushed-down keep filter); the staged struct computes
     # it once and both the filter and the output read attributes.
-    # Weight-carrier tiering matches with_hashed_linear_score.
-    if weights_df is None and (
-        weights is None or len(weights) <= WEIGHTS_LITERAL_MAX_F
-    ):
+    one = packed_weights(docs.sparkSession, weights, weights_df)
+    if one is None:
         base = docs
         packed = hashed_score_struct("text", weights=weights)
     else:
-        if weights_df is None:
-            one = docs.sparkSession.createDataFrame(
-                [([float(w) for w in weights],)], "__weights array<double>"
-            )
-        elif len(weights_df.columns) == 1:
-            one = weights_df.select(
-                F.col(weights_df.columns[0]).alias("__weights")
-            )
-        else:
-            b, w = weights_df.columns[:2]
-            one = weights_df.groupBy().agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct(F.col(b), F.col(w)))),
-                    lambda s: s[w].cast("double"),
-                ).alias("__weights")
-            )
         base = docs.join(F.broadcast(one))
         packed = hashed_score_struct("text", weights_col="__weights")
     staged = base.select(

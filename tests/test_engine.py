@@ -1121,11 +1121,63 @@ def test_ann_hybrid_filtered_search(lagoon, tmp_path):
     ).count() == 0
 
 
+def _ann_idx_dir(lagoon, name, column="data"):
+    info = lagoon.catalog.get_source(name)
+    phys, _h, _t = lagoon.catalog.get_column(info.ix, column)
+    return lagoon._ann_index_dir(info, phys)
+
+
+def _probe_reference(idx_dir, q, *, nprobe, topk, keep=lambda row: True):
+    """Exact cosine top-k over the rows of ``q``'s ``nprobe`` nearest
+    cells (ties to the lowest cell), read with pyarrow straight from the
+    index and scored with numpy: [(ix, cosine)], cosine desc then ix."""
+    import os
+
+    import numpy as np
+    import pyarrow.dataset as ds
+
+    qv = np.asarray(q, dtype="float64")
+
+    def cos(v):
+        v = np.asarray(v, dtype="float64")
+        return float(v @ qv / (np.linalg.norm(v) * np.linalg.norm(qv)))
+
+    cents = ds.dataset(os.path.join(idx_dir, "centroids")).to_table().to_pylist()
+    ranked = sorted(cents, key=lambda r: (-cos(r["centroid"]), r["cell"]))
+    cells = [r["cell"] for r in ranked[:nprobe]]
+    rows = (
+        ds.dataset(os.path.join(idx_dir, "assignments"), partitioning="hive")
+        .to_table(filter=ds.field("cell").isin(cells))
+        .to_pylist()
+    )
+    scored = sorted(
+        ((r["ix"], round(cos(r["__vec"]), 9)) for r in rows if keep(r)),
+        key=lambda s: (-s[1], s[0]),
+    )
+    return scored[:topk]
+
+
+def _by_query(rows):
+    """(ix, cosine) per query_id in rank order, checking ranks run 1..n."""
+    got = {}
+    for r in sorted(rows, key=lambda r: (r["query_id"], r["rank"])):
+        got.setdefault(r["query_id"], []).append((r["ix"], r["cosine"]))
+        assert r["rank"] == len(got[r["query_id"]])
+    return got
+
+
+def _assert_matches(got, want):
+    assert [ix for ix, _c in got] == [ix for ix, _c in want]
+    assert [c for _ix, c in got] == pytest.approx([c for _ix, c in want], abs=2e-9)
+
+
 def test_ann_search_batch_matches_single(lagoon, tmp_path):
-    """Round-8: N queries in ONE job — union of probed cells read once,
+    """N queries in ONE job — union of probed cells read once,
     broadcast query block, per-query top-k via a window partitioned by
-    query id. Must agree row-for-row with N individual probes, honor
-    the where= predicate, and never scan the source table."""
+    query id. The batch and the single-query call (a batch of one,
+    planned as orderBy+limit) both equal an exact top-k over each
+    query's probed cells, honor the where= predicate, and never scan
+    the source table."""
     rows = []
     for i in range(12):
         vec = [1.0, i * 0.01] if i % 2 == 0 else [i * 0.01, 1.0]
@@ -1138,16 +1190,19 @@ def test_ann_search_batch_matches_single(lagoon, tmp_path):
     )
     lagoon.ingest(str(p), "bat")
     lagoon.build_ann_index("bat", "vec", k=2, iters=2, include_columns=["lang"])
+    idx_dir = _ann_idx_dir(lagoon, "bat", "vec")
 
     queries = [[1.0, 0.05], [0.05, 1.0]]
-    batch = lagoon.ann_search_batch("bat", "vec", queries, topk=3, nprobe=2)
-    got = {}
-    for r in batch.collect():
-        got.setdefault(r["query_id"], []).append((r["rank"], r["ix"], r["cosine"]))
-    for qid, qv in enumerate(queries):
-        single = lagoon.ann_search("bat", "vec", qv, topk=3, nprobe=2).collect()
-        expect = [(i + 1, r["ix"], r["cosine"]) for i, r in enumerate(single)]
-        assert sorted(got[qid]) == expect, qid
+    for nprobe in (1, 2):
+        batch = lagoon.ann_search_batch(
+            "bat", "vec", queries, topk=3, nprobe=nprobe
+        )
+        got = _by_query(batch.collect())
+        for qid, qv in enumerate(queries):
+            want = _probe_reference(idx_dir, qv, nprobe=nprobe, topk=3)
+            _assert_matches(got[qid], want)
+            single = lagoon.ann_search("bat", "vec", qv, topk=3, nprobe=nprobe)
+            _assert_matches([tuple(r) for r in single.collect()], want)
 
     # the batch plan never touches the source table
     info = lagoon.catalog.get_source("bat", 1)
@@ -1157,21 +1212,22 @@ def test_ann_search_batch_matches_single(lagoon, tmp_path):
     )
     assert info.table_name not in plan
 
-    # where= filters before the per-query top-k, like the single path
+    # where= filters before the per-query top-k, in the batch and in
+    # the single-query call alike
     fbatch = lagoon.ann_search_batch(
         "bat", "vec", queries, topk=3, nprobe=2, where="lang = 'de'"
     )
-    for r in fbatch.collect():
-        assert (r["ix"] - 1) % 3 == 0  # ix is 1-based; 'de' rows are i%3==0
-    fgot = {}
-    for r in fbatch.collect():
-        fgot.setdefault(r["query_id"], []).append((r["rank"], r["ix"]))
-    fsingle = lagoon.ann_search(
-        "bat", "vec", queries[0], topk=3, nprobe=2, where="lang = 'de'"
-    ).collect()
-    assert sorted(fgot[0]) == [
-        (i + 1, r["ix"]) for i, r in enumerate(fsingle)
-    ]
+    fgot = _by_query(fbatch.collect())
+    for qid, qv in enumerate(queries):
+        want = _probe_reference(
+            idx_dir, qv, nprobe=2, topk=3, keep=lambda r: r["lang"] == "de"
+        )
+        assert all((ix - 1) % 3 == 0 for ix, _c in want)  # 'de' rows
+        _assert_matches(fgot[qid], want)
+        fsingle = lagoon.ann_search(
+            "bat", "vec", qv, topk=3, nprobe=2, where="lang = 'de'"
+        )
+        _assert_matches([tuple(r) for r in fsingle.collect()], want)
 
 
 @pytest.mark.slow  # heavyweight soak lane (round-12 verdict #3)
@@ -1798,10 +1854,11 @@ def test_ann_extend_drift_metric(lagoon, tmp_path):
 
 def test_ann_search_batch_pq_matches_single(lagoon, tmp_path):
     """Batched IVFADC: one codes scan scores every (query, row) pair,
-    one driver point read re-ranks all shortlists — answers must match
-    N single ADC probes row-for-row (cosine included: bit-parity
-    fold), and the Spark pairs-join tier must agree with the driver
-    tier."""
+    one driver point read re-ranks all shortlists. With a
+    rerank_factor whose shortlist covers every probed row, the ADC
+    answer must equal the exact top-k over the probed cells — batch
+    and single-query call alike (cosine included: bit-parity fold) —
+    and the Spark pairs-join tier must agree with the driver tier."""
     import json as _json
 
     vecs = []
@@ -1813,38 +1870,28 @@ def test_ann_search_batch_pq_matches_single(lagoon, tmp_path):
     p.write_text("\n".join(_json.dumps(v) for v in vecs) + "\n")
     lagoon.ingest(str(p), "bpq", file_type="json")
     lagoon.build_ann_index("bpq", "data", k=3, iters=2, pq_m=2, pq_k=4)
+    idx_dir = _ann_idx_dir(lagoon, "bpq")
 
     queries = [[1.0, 0.01, 0.0, 0.0], [0.0, 0.0, 1.0, 0.02],
                [0.1, 1.0, 0.0, 0.0]]
-    batch = lagoon.ann_search_batch(
-        "bpq", "data", queries, topk=3, nprobe=2, use_pq=True
-    ).collect()
-    got = {}
-    for r in batch:
-        got.setdefault(r["query_id"], []).append(
-            (r["rank"], r["ix"], r["cosine"])
-        )
+    # topk · rerank_factor = 24 covers all 24 rows: the shortlist is
+    # every probed row, so ADC can only differ from exact by a bug
+    kw = dict(topk=3, nprobe=2, use_pq=True, rerank_factor=8)
+    batch = lagoon.ann_search_batch("bpq", "data", queries, **kw)
+    assert batch.inputFiles() == []  # the driver re-rank tier
+    got = _by_query(batch.collect())
     for qid, q in enumerate(queries):
-        single = lagoon.ann_search(
-            "bpq", "data", q, topk=3, nprobe=2, use_pq=True
-        ).collect()
-        want = [(i + 1, r["ix"], r["cosine"]) for i, r in enumerate(single)]
-        assert sorted(got[qid]) == want, qid
+        want = _probe_reference(idx_dir, q, nprobe=2, topk=3)
+        _assert_matches(got[qid], want)
+        single = lagoon.ann_search("bpq", "data", q, **kw)
+        _assert_matches([tuple(r) for r in single.collect()], want)
 
     # Spark pairs-join tier (big-cell shape) agrees with the driver tier
     lagoon.ANN_DRIVER_RERANK_MAX_BYTES = 0
     try:
-        batch2 = lagoon.ann_search_batch(
-            "bpq", "data", queries, topk=3, nprobe=2, use_pq=True
-        ).collect()
-        got2 = {}
-        for r in batch2:
-            got2.setdefault(r["query_id"], []).append(
-                (r["rank"], r["ix"], r["cosine"])
-            )
-        assert {k: sorted(v) for k, v in got2.items()} == {
-            k: sorted(v) for k, v in got.items()
-        }
+        batch2 = lagoon.ann_search_batch("bpq", "data", queries, **kw)
+        assert batch2.inputFiles()  # the Spark tier reads the cells
+        assert _by_query(batch2.collect()) == got
     finally:
         del lagoon.ANN_DRIVER_RERANK_MAX_BYTES
 
@@ -1857,6 +1904,76 @@ def test_ann_search_batch_pq_matches_single(lagoon, tmp_path):
         lagoon.ann_search_batch(
             "bpq2", "data", [[1.0, 0.0]], topk=1, use_pq=True
         )
+
+
+def test_ann_missing_index_names_indexed_sibling(lagoon, tmp_path):
+    """Indexes are per-version: every entry point on an unindexed
+    version says which sibling version has one."""
+    p = tmp_path / "sib.json"
+    p.write_text("[1.0, 0.0]\n[0.9, 0.1]\n[0.0, 1.0]\n")
+    lagoon.ingest(str(p), "sib", file_type="json")
+    lagoon.build_ann_index("sib", "data", k=2, iters=1)
+    lagoon.ingest(str(p), "sib", file_type="json")  # v2, unindexed
+    assert lagoon.index_info("sib", "data", version=1)["k"] == 2
+    hint = "v1 of 'sib' has one"
+    with pytest.raises(KeyError, match=hint):
+        lagoon.index_info("sib", "data")
+    with pytest.raises(KeyError, match=hint):
+        lagoon.ann_search_batch("sib", "data", [[1.0, 0.0]])
+    with pytest.raises(KeyError, match=hint):
+        lagoon.ann_search("sib", "data", [1.0, 0.0])
+
+
+def test_ann_pq_index_without_codes_raises(lagoon, tmp_path):
+    """A format-3 index whose codes/ directory is gone is corrupt: an
+    ADC probe raises instead of returning an empty answer."""
+    import json as _json
+    import os
+    import shutil
+
+    vecs = [[1.0, 0.01 * i, 0.0, 0.0] for i in range(6)]
+    vecs += [[0.0, 0.0, 1.0, 0.01 * i] for i in range(6)]
+    p = tmp_path / "noc.json"
+    p.write_text("\n".join(_json.dumps(v) for v in vecs) + "\n")
+    lagoon.ingest(str(p), "noc", file_type="json")
+    lagoon.build_ann_index("noc", "data", k=2, iters=1, pq_m=2, pq_k=2)
+    shutil.rmtree(os.path.join(_ann_idx_dir(lagoon, "noc"), "codes"))
+    kw = dict(topk=2, nprobe=2, use_pq=True, rerank_factor=4)
+    with pytest.raises(RuntimeError, match="codes/ directory is missing"):
+        lagoon.ann_search_batch("noc", "data", [[1.0, 0.0, 0.0, 0.0]], **kw)
+    with pytest.raises(RuntimeError, match="codes/ directory is missing"):
+        lagoon.ann_search("noc", "data", [1.0, 0.0, 0.0, 0.0], **kw)
+
+
+def test_ann_search_single_query_plan(lagoon, tmp_path):
+    """A single query is a batch of one whose top-k plans as a
+    TakeOrderedAndProject: no rank window and no shuffle exchange in
+    the full-precision plan, and no more Spark jobs than the dedicated
+    single-query path it replaced (full precision 2: the query block's
+    broadcast and the probe; driver-tier ADC 1: the codes scan)."""
+    import json as _json
+    import re
+
+    vecs = [[1.0, 0.01 * i, 0.0, 0.0] for i in range(8)]
+    vecs += [[0.0, 0.01 * i, 1.0, 0.0] for i in range(8)]
+    p = tmp_path / "one.json"
+    p.write_text("\n".join(_json.dumps(v) for v in vecs) + "\n")
+    lagoon.ingest(str(p), "one", file_type="json")
+    lagoon.build_ann_index("one", "data", k=2, iters=1, pq_m=2, pq_k=2)
+    q = [1.0, 0.0, 0.0, 0.0]
+    full = lambda: lagoon.ann_search("one", "data", q, topk=3, nprobe=2)
+    adc = lambda: lagoon.ann_search(
+        "one", "data", q, topk=3, nprobe=2, use_pq=True, rerank_factor=4
+    )
+    res = full()
+    assert [r["ix"] for r in res.collect()] == [1, 2, 3]
+    plan = res._jdf.queryExecution().executedPlan().toString()
+    assert "TakeOrderedAndProject" in plan
+    assert "Window" not in plan
+    assert not re.search(r"(?<!Broadcast)Exchange", plan)
+    assert [r["ix"] for r in adc().collect()] == [1, 2, 3]
+    assert len(_job_ids(lagoon.spark, lambda: full().collect())) <= 2
+    assert len(_job_ids(lagoon.spark, lambda: adc().collect())) <= 1
 
 
 def test_ann_pq_zero_norm_vector_matches_spark_tier(lagoon, tmp_path):
