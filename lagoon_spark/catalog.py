@@ -955,6 +955,21 @@ class Catalog:
                 h.update(f"{e.name}:{st.st_mtime_ns}:{st.st_size};".encode())
         return h.hexdigest()
 
+    def note_data_rewrite(self, source_ix: int, table: str) -> None:
+        """Record that ``table``'s files were rewritten in place with no
+        catalog row changing (``optimize_layout``'s directory swap).
+        The line lands in ``data_rewrites.log.jsonl``, which
+        :meth:`state_token` digests, so every session's ``sql()`` memo
+        misses and re-registers the views that read the old files."""
+        import json as _json
+
+        os.makedirs(self.dir, exist_ok=True)
+        line = {"ix": int(source_ix), "table": table, "at": _now()}
+        with open(os.path.join(self.dir, "data_rewrites.log.jsonl"), "a") as fh:
+            fh.write(_json.dumps(line) + "\n")
+            fh.flush()
+            os.fsync(fh.fileno())
+
     def refresh(self, force: bool = False) -> None:
         """Invalidate the in-memory table cache so the next load()
         builds on committed on-disk state.

@@ -33,7 +33,7 @@ from lagoon_spark.ingest.infer import (
     infer_column_types,
 )
 from lagoon_spark.ingest.names import no_dup_names, sanitize
-from lagoon_spark.ingest.rowid import with_ix
+from lagoon_spark.ingest.rowid import with_ix, with_ix_count
 
 
 #: lattice type → Spark cast target for schema-native (parquet) columns
@@ -280,8 +280,10 @@ class Lagoon:
         those partition directories of it). While the directory is the
         one its schema was remembered from, the schema is passed in, so
         Spark starts no footer-inference job; otherwise Spark infers it
-        and a whole-table read remembers it. Only schemas are kept —
-        every read lists the files afresh."""
+        and the read remembers it, keyed on the stat of ``path`` itself
+        even for a partition read (an ANN probe of an index another
+        engine built pays the inference once, not per probe). Only
+        schemas are kept — every read lists the files afresh."""
         key = _dir_key(path)  # before the read: a later rewrite re-keys
         hit = self._table_schemas.get(path)
         reader = self.spark.read
@@ -290,7 +292,7 @@ class Lagoon:
         if key is not None and hit is not None and hit[0] == key:
             reader = reader.schema(hit[1])
         df = reader.parquet(*(parts or (path,)))
-        if key is not None and not parts:
+        if key is not None:
             self._table_schemas[path] = (key, df.schema)
         return df
 
@@ -578,11 +580,12 @@ class Lagoon:
             created=created, fmt="tabular",
         )
         try:
-            untyped = with_ix(csvmod.read_untyped(self.spark, path, fmt, width))
+            untyped, row_count = with_ix_count(
+                csvmod.read_untyped(self.spark, path, fmt, width)
+            )
             untyped = untyped.select("ix", *[f"c{i+1}" for i in range(width)])
             self._write_table(untyped, self._data_path(table_name))
             stored = self._read_table(self._data_path(table_name))
-            row_count = stored.count()
             emit({"event": "loaded", "rows": row_count})
 
             # friendly headers (A11/A12): sanitized, deduped; headerless
@@ -659,7 +662,7 @@ class Lagoon:
 
         # rename to physical c1..cn BEFORE ix assignment so a source
         # column literally named "ix" cannot collide
-        raw = with_ix(
+        raw, row_count = with_ix_count(
             df.select(*[F.col(f.name).alias(p) for f, p in zip(fields, phys)])
         )
         emit({"event": "format", "width": width, "schema_native": True})
@@ -672,7 +675,6 @@ class Lagoon:
                 "ix", *[canon(p, f.dataType).alias(p) for p, f in zip(phys, fields)]
             )
             self._write_table(untyped, self._data_path(table_name))
-            row_count = self._read_table(self._data_path(table_name)).count()
             emit({"event": "loaded", "rows": row_count})
 
             friendly = no_dup_names([f.name for f in fields])
@@ -767,10 +769,11 @@ class Lagoon:
 
             lines = self.spark.read.text(src).withColumnRenamed("value", "c1")
             lines = lines.filter(F.trim(F.col("c1")) != "")
-            untyped = with_ix(lines).select("ix", "c1")
-            self._write_table(untyped, self._data_path(table_name))
+            untyped, row_count = with_ix_count(lines)
+            self._write_table(
+                untyped.select("ix", "c1"), self._data_path(table_name)
+            )
             stored = self._read_table(self._data_path(table_name))
-            row_count = stored.count()
             emit({"event": "loaded", "rows": row_count})
 
             # distributed JsonType inference: Arrow-batched fold, driver
@@ -1034,6 +1037,9 @@ class Lagoon:
         os.rename(tmp, path)
         schema = self._table_schemas.pop(tmp)[1]
         self._table_schemas[path] = (_dir_key(path), schema)
+        # no catalog row changed; move the state token anyway, so other
+        # sessions' sql() views stop reading the deleted files
+        self.catalog.note_data_rewrite(info.ix, table)
         self.register_views(info)
         return info
 
@@ -3203,7 +3209,6 @@ class Lagoon:
         reindex: bool = False,
     ) -> SourceInfo:
         from lagoon_spark import security as _sec
-        from lagoon_spark.ingest.rowid import dense_order_ix
         from lagoon_spark.operators import dedup as _dedup
 
         self._check_can_add_version(name, _sec)
@@ -3257,10 +3262,10 @@ class Lagoon:
         ordinary NEW VERSION — dense re-numbered in original order,
         parent types copied verbatim, parent auto-deprecated, one
         delete restores, optional ANN reindex over the survivors."""
-        from lagoon_spark.ingest.rowid import dense_order_ix
+        from lagoon_spark.ingest.rowid import dense_order_ix_count
 
         rows = src.withColumnRenamed("ix", "__ord").join(keep, "__ord")
-        numbered, pinned = dense_order_ix(rows, "__ord")
+        numbered, pinned, row_count = dense_order_ix_count(rows, "__ord")
         ix, _version, table_name, _view = self.catalog.new_source(
             name,
             url=info.url,
@@ -3273,7 +3278,6 @@ class Lagoon:
             phys_cols = [c[0] for c in info.columns]
             out = numbered.select("ix", *phys_cols)
             self._write_table(out, self._data_path(table_name))
-            row_count = self._read_table(self._data_path(table_name)).count()
             self.catalog.set_columns(ix, list(info.columns))
             self.catalog.update_source(
                 ix, row_count=row_count, json_type=info.json_type
@@ -3668,9 +3672,11 @@ class Lagoon:
             added_by=self.user, created=created, fmt="tabular",
         )
         try:
-            out = with_ix(joined).select("ix", "row_ix", "foreign_ix", metadata_field, "value")
-            self._write_table(out, self._data_path(table_name))
-            row_count = self._read_table(self._data_path(table_name)).count()
+            out, row_count = with_ix_count(joined)
+            self._write_table(
+                out.select("ix", "row_ix", "foreign_ix", metadata_field, "value"),
+                self._data_path(table_name),
+            )
             self.catalog.set_columns(
                 ix,
                 [

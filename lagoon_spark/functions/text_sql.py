@@ -107,13 +107,8 @@ def _defs() -> list[tuple[str, str, str, str]]:
         f"i -> ascii(substr(w, i, 1))), CAST(0 AS BIGINT), "
         f"(a, b) -> (a * {MULT} + b) % {MOD}))"
     )
-    from lagoon_spark.operators.dedup import minhash_seeds
+    from lagoon_spark.operators.dedup import minhash_array_sql
 
-    minhash_mins = ", ".join(
-        f"array_min(transform(fps, f -> (pmod(f, {MOD}) * {a} "
-        f"+ {b}) % {MOD}))"
-        for a, b in minhash_seeds(16)
-    )
     trigrams = (
         "transform(sequence(1, size(toks) - 2), "
         "i -> concat_ws(' ', slice(toks, i, 3)))"
@@ -173,7 +168,7 @@ def _defs() -> list[tuple[str, str, str, str]]:
             # nested SQL-UDF calls are not supported in UDF bodies)
             f"CASE WHEN size({_TOKS}) = 0 THEN CAST(array() AS ARRAY<BIGINT>) "
             f"ELSE transform(array(array_distinct({word_fp})), "
-            f"fps -> array({minhash_mins}))[0] END",
+            f"fps -> {minhash_array_sql('fps', 16)})[0] END",
         ),
         (
             "lagoon_c4_clean",

@@ -44,6 +44,13 @@ _MAP_LITERAL_MAX = int(os.environ.get("LAGOON_IX_MAP_LITERAL_MAX", "1000"))
 
 
 def with_ix(df: DataFrame, ix_col: str = "ix") -> DataFrame:
+    return with_ix_count(df, ix_col)[0]
+
+
+def with_ix_count(df: DataFrame, ix_col: str = "ix") -> "tuple[DataFrame, int]":
+    """:func:`with_ix` plus the number of rows it numbered: the
+    per-group counts the numbering collects already sum to it, so a
+    caller that writes the frame needs no count job of its own."""
     from pyspark.errors import AnalysisException
 
     base = df.withColumn("__mid", F.monotonically_increasing_id()).withColumn(
@@ -73,7 +80,7 @@ def with_ix(df: DataFrame, ix_col: str = "ix") -> DataFrame:
         # property test (hypothesis)
         return tagged.withColumn(ix_col, F.lit(0).cast("long")).drop(
             "__mid", "__pid", "__file"
-        )
+        ), 0
     if len(offsets) > _MAP_LITERAL_MAX:
         # broadcast-join tier: the offsets live in a k-row DataFrame
         # broadcast to every task (no shuffle of the data side, same
@@ -88,7 +95,7 @@ def with_ix(df: DataFrame, ix_col: str = "ix") -> DataFrame:
         ).cast("long")
         # join-with-using reorders columns (keys first) — restore the
         # caller's column order, ix last, like the literal tier
-        return joined.withColumn(ix_col, ix).select(*df.columns, ix_col)
+        return joined.withColumn(ix_col, ix).select(*df.columns, ix_col), acc
     key = F.concat_ws("#", F.col("__file"), F.col("__pid").cast("string"))
     base_map = F.create_map(
         *[F.lit(x) for f, p, _m, off in offsets for x in (f"{f}#{p}", off)]
@@ -97,10 +104,16 @@ def with_ix(df: DataFrame, ix_col: str = "ix") -> DataFrame:
         *[F.lit(x) for f, p, m, _off in offsets for x in (f"{f}#{p}", m)]
     )
     ix = (base_map[key] + (F.col("__mid") - min_map[key]) + 1).cast("long")
-    return tagged.withColumn(ix_col, ix).drop("__mid", "__pid", "__file")
+    return tagged.withColumn(ix_col, ix).drop("__mid", "__pid", "__file"), acc
 
 
 def dense_order_ix(df: DataFrame, order_col: str, out_col: str = "ix"):
+    """:func:`dense_order_ix_count` without the row count."""
+    out, ranged, _n = dense_order_ix_count(df, order_col, out_col)
+    return out, ranged
+
+
+def dense_order_ix_count(df: DataFrame, order_col: str, out_col: str = "ix"):
     """Dense 1-based rank of ``order_col`` (values must be unique)
     without a single-task global window.
 
@@ -119,9 +132,11 @@ def dense_order_ix(df: DataFrame, order_col: str, out_col: str = "ix"):
     cluster deployment), ``pin`` upgrades to a fault-tolerant
     ``checkpoint()`` automatically.
 
-    Returns ``(out_df, pinned)``; the caller should ``checkpointing.unpin(pinned)``
-    after materializing ``out_df`` (e.g. after the parquet write) to
-    free the checkpoint blocks.
+    Returns ``(out_df, pinned, rows)``; the caller should
+    ``checkpointing.unpin(pinned)`` after materializing ``out_df`` (e.g.
+    after the parquet write) to free the checkpoint blocks. ``rows`` is
+    the row count, summed from the per-partition counts the numbering
+    collects anyway; ``pinned`` holds exactly those rows.
     """
     from pyspark.sql import Window as W
 
@@ -139,7 +154,11 @@ def dense_order_ix(df: DataFrame, order_col: str, out_col: str = "ix"):
         offsets[int(row["__pid"])] = acc
         acc += int(row["count"])
     if not offsets:  # zero rows
-        return ranged.withColumn(out_col, F.lit(0).cast("long")).drop("__pid"), ranged
+        return (
+            ranged.withColumn(out_col, F.lit(0).cast("long")).drop("__pid"),
+            ranged,
+            0,
+        )
     off_map = F.create_map(
         *[F.lit(x) for pid, off in offsets.items() for x in (pid, off)]
     )
@@ -147,7 +166,7 @@ def dense_order_ix(df: DataFrame, order_col: str, out_col: str = "ix"):
     out = ranged.withColumn(
         out_col, (off_map[F.col("__pid")] + F.row_number().over(local_w)).cast("long")
     ).drop("__pid")
-    return out, ranged
+    return out, ranged, acc
 
 
 def dense_prefix_sum(

@@ -17,14 +17,16 @@ Scale design (the part that matters at 100 TB):
 * **n-gram Jaccard** is the verifier stage run only on candidate pairs
   (blocking keys or LSH buckets), never on the cross product.
 
-Every function is a pure DataFrame→DataFrame transformation; nothing
-collects to the driver.
+Every function is a DataFrame→DataFrame transformation. The one
+driver collect is bounded: ``connected_components`` finishes a graph
+of at most ``CC_DRIVER_MAX_EDGES`` edges on the driver.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from lagoon_spark.checkpointing import handles, pin_handles, unpin
 from lagoon_spark.operators.text import MOD, word_fingerprints, word_hashes_fast
@@ -44,8 +46,19 @@ def minhash_seeds(num_hashes: int) -> list[tuple[int, int]]:
     synthetic corpus: 35 candidate pairs per document against a true
     near-dup rate of 0.1 — and every band carried the same
     information, so banding bought no independence). Golden-ratio
-    multiples mod p spread the multipliers across the whole field,
-    making the permutations effectively independent min-wise hashes.
+    multiples mod p spread the multipliers across the whole field.
+
+    The 16 values are still correlated, not independent min-wise
+    hashes: with ``g``, ``h`` the two golden constants mod p,
+    permutation i (1-based) is ``i·(f·g + h) + 13 mod p``, a fixed
+    multiple of ONE base hash ``x = f·g + h``. A token with a small
+    ``x`` (below p/16) keeps ``i·x`` below p for every i, so it wins
+    many permutations at once: two documents that share one such
+    token agree in many positions whatever their Jaccard similarity,
+    and unrelated documents can merge.
+    The family is kept because ``lagoonbench/refdedup.py`` restates
+    it and the benchmark's dedup check compares against it; a fix
+    belongs in a change to the benchmark.
 
     Changing the family changes signatures; every DuckDB oracle
     regenerates its SQL from THIS function (d06/d11/d26/st11,
@@ -133,17 +146,55 @@ def minhash_signature(
     else:
         fps = word_fingerprints(text_col)
     df = df.withColumn("__fps", F.array_distinct(fps))
+    return df.withColumn(
+        out_col, F.expr(minhash_array_sql("__fps", num_hashes))
+    ).drop("__fps")
 
-    def perm(a: int, b: int):
-        # closure factory: a plain `lambda f, a=a, b=b` would present a
-        # 3-arg signature to PySpark's higher-order function binder
-        return lambda f: (F.pmod(f, F.lit(MOD)) * a + b) % F.lit(MOD)
 
-    mins = [
-        F.array_min(F.transform(F.col("__fps"), perm(a, b)))
+def minhash_array_sql(fps: str, num_hashes: int) -> str:
+    """SQL for the MinHash signature of the fingerprint-array
+    expression ``fps``: one ``array_min`` over each permutation of
+    :func:`minhash_seeds`. Built as ONE SQL text so the whole signature
+    costs one parse; the same per-hash loop through the Column API made
+    a py4j call per node (building and analyzing a 16-hash signature
+    measured ~0.31 s that way, ~0.06 s as one parse). ``pmod`` of a
+    BIGINT by the INT modulus stays BIGINT, so the products cannot
+    overflow."""
+    return "array(" + ", ".join(
+        f"array_min(transform({fps}, f -> (pmod(f, {MOD}) * {a} + {b}) % {MOD}))"
         for a, b in minhash_seeds(num_hashes)
-    ]
-    return df.withColumn(out_col, F.array(*mins)).drop("__fps")
+    ) + ")"
+
+
+def _band_keys_sql(sig: str, bands: int, rows_per_band: int) -> str:
+    """SQL for the ``bands`` LSH bucket keys of signature ``sig``: band
+    b's key joins signature entries ``b·r … b·r + r - 1`` with ``_``."""
+    return "array(" + ", ".join(
+        "concat_ws('_', "
+        + ", ".join(f"{sig}[{b * rows_per_band + r}]" for r in range(rows_per_band))
+        + ")"
+        for b in range(bands)
+    ) + ")"
+
+
+def _matches_sql(sig_a: str, sig_b: str, n: int) -> str:
+    """SQL for the number of positions where signatures agree."""
+    return "(" + " + ".join(
+        f"CASE WHEN {sig_a}[{i}] = {sig_b}[{i}] THEN 1 ELSE 0 END" for i in range(n)
+    ) + ")"
+
+
+def _first_band_sql(band: str, keys_a: str, keys_b: str, bands: int) -> str:
+    """SQL that is true iff ``band`` is the FIRST band in which the two
+    key arrays agree, given that they agree in ``band``: band b keeps
+    the pair iff every earlier band key differs."""
+    whens = " ".join(
+        f"WHEN {b} THEN NOT ("
+        + " OR ".join(f"{keys_a}[{p}] = {keys_b}[{p}]" for p in range(b))
+        + ")"
+        for b in range(1, bands)
+    )
+    return f"CASE {band} {whens} ELSE true END" if whens else "true"
 
 
 def lsh_candidate_pairs(
@@ -181,11 +232,6 @@ def lsh_candidate_pairs(
     """
     n = bands * rows_per_band
 
-    def band_key(b: int) -> F.Column:
-        return F.concat_ws(
-            "_", *[F.col("__sig")[b * rows_per_band + r] for r in range(rows_per_band)]
-        )
-
     # (id, signature) computed ONCE and pinned: it feeds the within
     # self-join and both cross-expansion joins — without the persist
     # the (expensive) signature expressions would recompute from the
@@ -200,7 +246,7 @@ def lsh_candidate_pairs(
     groups = (
         members.select("__sig")
         .distinct()
-        .withColumn("__keys", F.array(*[band_key(b) for b in range(bands)]))
+        .withColumn("__keys", F.expr(_band_keys_sql("__sig", bands, rows_per_band)))
         .persist()
     )
     groups.count()  # eager: all join sides read a warm cache
@@ -226,19 +272,8 @@ def lsh_candidate_pairs(
         F.posexplode("__keys").alias("band", "key"),
     )
 
-    matches = sum(
-        F.when(F.col("__sig_a")[i] == F.col("__sig_b")[i], 1).otherwise(0)
-        for i in range(n)
-    )
-    earlier_match = F.lit(False)
-    first_band = F.lit(True)
-    for prev in range(bands - 1):
-        earlier_match = earlier_match | (
-            F.col("__keys_a")[prev] == F.col("__keys_b")[prev]
-        )
-        first_band = F.when(F.col("__band") == prev + 1, ~earlier_match).otherwise(
-            first_band
-        )
+    matches = F.expr(_matches_sql("__sig_a", "__sig_b", n))
+    first_band = F.expr(_first_band_sql("__band", "__keys_a", "__keys_b", bands))
 
     sig_pairs = (
         a.join(
@@ -300,11 +335,6 @@ def neardup_clusters(
     assert num_hashes == n, "signature length must equal bands*rows_per_band"
     sigs = minhash_signature(df, text_col, num_hashes=num_hashes, method=method)
 
-    def band_key(b: int) -> F.Column:
-        return F.concat_ws(
-            "_", *[F.col("__sig")[b * rows_per_band + r] for r in range(rows_per_band)]
-        )
-
     # pinned for the same reason as in lsh_candidate_pairs: the minhash
     # expressions must not recompute for the final member join
     members = sigs.select(
@@ -313,7 +343,7 @@ def neardup_clusters(
     groups = (
         members.groupBy("__sig")
         .agg(F.min("__id").alias("__gid"))
-        .withColumn("__keys", F.array(*[band_key(b) for b in range(bands)]))
+        .withColumn("__keys", F.expr(_band_keys_sql("__sig", bands, rows_per_band)))
         .persist()
     )
     groups.count()
@@ -328,10 +358,7 @@ def neardup_clusters(
         F.col("__gid").alias("__gid_b"),
         F.explode("__keys").alias("key"),
     )
-    matches = sum(
-        F.when(F.col("__sig_a")[i] == F.col("__sig_b")[i], 1).otherwise(0)
-        for i in range(n)
-    )
+    matches = F.expr(_matches_sql("__sig_a", "__sig_b", n))
     edges = (
         a.join(
             b,
@@ -355,6 +382,15 @@ def neardup_clusters(
     return pin_handles(out, members, groups, *handles(cc))
 
 
+#: ``connected_components`` finishes a graph of at most this many edge
+#: rows on the driver (union-find, one collect); above it the Spark
+#: tier runs. Measured on a 4-core host with four downstream jobs, the
+#: driver tier took 1.4 s at 5000 edges against 3.1 s for the Spark
+#: tier, and stayed faster up to 20k edges; the bound keeps the
+#: ``VALUES`` mapping at ≤10k rows, whose parse stays ≤0.25 s.
+CC_DRIVER_MAX_EDGES = 5000
+
+
 def connected_components(
     edges: DataFrame,
     nodes: DataFrame | None = None,
@@ -367,10 +403,29 @@ def connected_components(
 
     The final stage of a near-dup pipeline — candidate pairs from LSH
     become duplicate *clusters*, and one representative per cluster
-    survives. Implemented as iterative hash-min label propagation:
-    every round each node takes the min label among itself and its
-    neighbours; converges in O(graph diameter) rounds (near-dup
-    clusters are shallow — a handful of rounds in practice).
+    survives. Two tiers, the contract-then-finish shape of Kiveris et
+    al. (below): both give every node the min id of its component.
+
+    **Driver tier.** The edge frame is collected with
+    ``limit(CC_DRIVER_MAX_EDGES + 1)`` before anything is pinned; a
+    graph of at most ``CC_DRIVER_MAX_EDGES`` edge rows (integral ids
+    of one type, none null) is finished by union-find on the driver,
+    and the (node, cluster) mapping comes back as a ``VALUES``
+    LocalRelation. Not ``createDataFrame``: its RDD-backed relation
+    makes every downstream job that reads it a real scan (measured
+    ~0.55 s per downstream join job against ~0.25 s for ``VALUES``, at
+    4k-20k rows), and the mapping feeds several. The literal's parse
+    cost grows with its row count (0.25 s at 10k rows), which is what
+    bounds the tier: at most 2·``CC_DRIVER_MAX_EDGES`` rows. This tier pins nothing and attaches no handles;
+    a near-dup graph is usually this small, since the pipeline
+    collapses exact duplicates before the band join.
+
+    **Spark tier.** Iterative hash-min label propagation: every round
+    each node takes the min label among itself and its neighbours;
+    converges in O(graph diameter) rounds (near-dup clusters are
+    shallow — a handful of rounds in practice). Above the threshold it
+    evaluates the edge frame a second time, to pin the undirected
+    edge set.
 
     Scale notes: each round is one shuffle on node id (uniform key).
     Iterative DataFrame algorithms MUST truncate lineage per round —
@@ -395,7 +450,78 @@ def connected_components(
     cluster)`` rows. Ids that also appear in ``edges`` come out once
     whatever their multiplicity in ``nodes``. The in-repo caller,
     :func:`neardup_clusters`, passes one row per signature group.
+    Both tiers keep this contract: isolated ``nodes`` join in through
+    the same ``left_anti`` join.
     """
+    ends = edges.select(F.col(id_a), F.col(id_b))
+    types = {f.dataType for f in ends.schema.fields}
+    if len(types) == 1 and isinstance(next(iter(types)), T.IntegralType):
+        pairs = ends.limit(CC_DRIVER_MAX_EDGES + 1).collect()
+        if len(pairs) <= CC_DRIVER_MAX_EDGES and all(
+            a is not None and b is not None for a, b in pairs
+        ):
+            labels = _driver_components(
+                edges.sparkSession, pairs, next(iter(types)), node_col
+            )
+            if nodes is None:
+                return labels
+            return labels.unionByName(
+                _isolated(nodes, labels.select(node_col), node_col)
+            )
+    return _spark_components(edges, nodes, id_a, id_b, node_col, max_iter)
+
+
+def _isolated(nodes: DataFrame, endpoints: DataFrame, node_col: str) -> DataFrame:
+    """The ``nodes`` ids absent from ``endpoints``, each its own cluster."""
+    return (
+        nodes.select(F.col(node_col))
+        .join(endpoints, node_col, "left_anti")
+        .select(node_col, F.col(node_col).alias("cluster"))
+    )
+
+
+def _driver_components(
+    spark: SparkSession, pairs: list, dtype: T.IntegralType, node_col: str
+) -> DataFrame:
+    """Union-find over the collected edge ``pairs``; returns the
+    (node, cluster = min id of its component) mapping of every endpoint
+    as a ``VALUES`` frame of ``dtype`` ids."""
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:  # the smaller root wins, so a root is its component's min
+            parent[max(ra, rb)] = min(ra, rb)
+    # the LIMIT drops the placeholder row that types an empty mapping
+    vals = ",".join(f"({x}, {find(x)})" for x in parent) or "(0, 0)"
+    t = dtype.simpleString()
+    col = node_col.replace("`", "``")
+    return spark.sql(
+        f"SELECT CAST(n AS {t}) AS `{col}`, CAST(c AS {t}) AS cluster "
+        f"FROM (VALUES {vals}) AS v(n, c) LIMIT {len(parent)}"
+    )
+
+
+def _spark_components(
+    edges: DataFrame,
+    nodes: DataFrame | None,
+    id_a: str,
+    id_b: str,
+    node_col: str,
+    max_iter: int,
+) -> DataFrame:
+    """The Spark tier of :func:`connected_components`: hash-min label
+    propagation from the changed frontier, with the star escape."""
     from lagoon_spark.checkpointing import pin
 
     und = edges.select(
@@ -413,16 +539,8 @@ def connected_components(
         (F.col("__nb") < F.col("src")).alias("__ch"),
     )
     if nodes is not None:
-        iso = nodes.select(F.col(node_col)).join(
-            und.select(F.col("src").alias(node_col)), node_col, "left_anti"
-        )
-        labels = labels.unionByName(
-            iso.select(
-                node_col,
-                F.col(node_col).alias("cluster"),
-                F.lit(False).alias("__ch"),
-            )
-        )
+        iso = _isolated(nodes, und.select(F.col("src").alias(node_col)), node_col)
+        labels = labels.unionByName(iso.withColumn("__ch", F.lit(False)))
     labels = pin(labels)
     label_pin = labels  # the checkpoint backing the current labels
     changed = labels.filter("__ch").count()
@@ -780,13 +898,7 @@ def phash_neardup_pairs(
         F.col("__keys").alias("__keys_b"),
         F.posexplode("__keys").alias("band", "key"),
     )
-    earlier = F.lit(False)
-    first_band = F.lit(True)
-    for prev in range(bands - 1):
-        earlier = earlier | (F.col("__keys_a")[prev] == F.col("__keys_b")[prev])
-        first_band = F.when(F.col("__band") == prev + 1, ~earlier).otherwise(
-            first_band
-        )
+    first_band = F.expr(_first_band_sql("__band", "__keys_a", "__keys_b", bands))
     dist = F.bit_count(F.col("__ha").bitwiseXOR(F.col("__hb"))).cast("int")
     hash_pairs = (
         a.join(

@@ -17,12 +17,16 @@ from pyspark.sql import functions as F
 import pytest
 
 
-def test_long_chain_escapes_to_star_algorithm(spark):
+def test_long_chain_escapes_to_star_algorithm(spark, monkeypatch):
     """A 200-node chain has diameter 200: hash-min propagation cannot
     converge in 3 rounds, so connected_components must finish on the
     large-star/small-star path — and still label every node with the
-    global min (0)."""
+    global min (0). The driver tier is switched off: this is the Spark
+    tier's test."""
+    from lagoon_spark.operators import dedup
     from lagoon_spark.operators.dedup import connected_components
+
+    monkeypatch.setattr(dedup, "CC_DRIVER_MAX_EDGES", 0)
 
     n = 200
     edges = spark.createDataFrame(
@@ -34,11 +38,17 @@ def test_long_chain_escapes_to_star_algorithm(spark):
     assert all(r["cluster"] == 0 for r in rows)
 
 
-def test_star_handles_multiple_components_and_partial_convergence(spark):
+def test_star_handles_multiple_components_and_partial_convergence(
+    spark, monkeypatch
+):
     """Two components (a long chain and a converged triangle) plus an
     isolated node: the star escape must fix only the unconverged
-    component and leave the rest intact."""
+    component and leave the rest intact (Spark tier: the driver tier is
+    switched off)."""
+    from lagoon_spark.operators import dedup
     from lagoon_spark.operators.dedup import connected_components
+
+    monkeypatch.setattr(dedup, "CC_DRIVER_MAX_EDGES", 0)
 
     chain = [(100 + i, 100 + i + 1) for i in range(80)]
     triangle = [(1, 2), (2, 3), (1, 3)]
@@ -85,7 +95,10 @@ def test_reliable_checkpoint_mode_when_dir_configured(tmp_path):
         spark.sparkContext.setCheckpointDir({str(ckpt)!r})
 
         from lagoon_spark.ingest.rowid import dense_order_ix
+        from lagoon_spark.operators import dedup
         from lagoon_spark.operators.dedup import connected_components
+
+        dedup.CC_DRIVER_MAX_EDGES = 0  # the Spark tier pins; test it
 
         df = spark.range(0, 5000).select(
             (F.col("id") * 7919 % 100003).alias("ord")

@@ -507,9 +507,9 @@ def test_view_memo_follows_another_engines_rewrite(spark, tmp_path):
     """A version's views are re-registered when its table directory is
     rewritten under the same path. Engine B, on its own session, swaps
     in an optimize_layout rewrite (a renamed directory; the old files
-    are gone, so a stale view could not even run); optimize_layout
-    leaves the catalog as it is, so A's next catalog change sends its
-    sql() down the miss path, where only the signature notices."""
+    are gone, so a stale view could not even run); A's next sql()
+    takes the miss path, where only the signature notices which
+    version's directory moved."""
     import os
 
     wh = str(tmp_path / "wh")
@@ -623,6 +623,165 @@ def test_export_after_dedup_starts_only_the_write(lagoon, tmp_path):
     hit = _job_ids(lagoon.spark, lambda: lagoon.export_query_dataset(q, out))
     assert 1 <= len(miss) == len(hit) <= 2
     assert lagoon.spark.read.parquet(out).count() == info.row_count
+
+
+def test_row_count_comes_from_the_numbering_pass(lagoon, tmp_path):
+    """The row_count recorded by CSV, JSON and parquet ingest,
+    ingest_extra_data and a survivor version (dedup_source,
+    clean_source, one that keeps no row) is the numbering pass's total,
+    with no re-read of the written table; it equals that table's
+    count."""
+    import json as _json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    spark = lagoon.spark
+
+    def check(info):
+        path = lagoon._data_path(info.table_name)
+        assert info.row_count == spark.read.parquet(path).count(), info.name
+
+    base = "the quick brown fox jumps over the lazy dog and the cat. " * 3
+    p = tmp_path / "r.csv"
+    p.write_text(
+        "txt,n\n"
+        + "\n".join(
+            f"{base}{t},{i}" for i, t in enumerate(["a", "a", "b", "x y z w v"])
+        )
+        + "\n"
+    )
+    check(lagoon.ingest(str(p), "r"))
+    check(lagoon.dedup_source("r", "txt", min_matches=6))
+    check(lagoon.clean_source("r", "txt", rules="gopher"))
+    none = lagoon.clean_source("r", "txt", rules="gopher", min_words=10_000)
+    assert none.row_count == 0
+    check(none)
+
+    j = tmp_path / "r.jsonl"
+    j.write_text("\n".join(_json.dumps({"k": i}) for i in range(7)) + "\n\n")
+    check(lagoon.ingest(str(j), "rj", file_type="json"))
+
+    pq_path = str(tmp_path / "r.parquet")
+    pq.write_table(pa.table({"a": list(range(5)), "s": list("abcde")}), pq_path)
+    check(lagoon.ingest(pq_path, "rp"))
+
+    lagoon.ingest(_write(tmp_path, "m.csv", "n\n1\n2\n2\n"), "rm")
+    check(
+        lagoon.ingest_extra_data(
+            _write(tmp_path, "x.csv", "1,2\ntrue,false\n"), "rx",
+            metadata_source="rm", metadata_field="n",
+        )
+    )
+
+
+def test_clean_and_dedup_job_budgets(lagoon, tmp_path, monkeypatch):
+    """clean_source and dedup_source start a bounded number of Spark
+    jobs on a small corpus, and connected_components' driver tier runs
+    only the edge collect and pins nothing, so no localCheckpoint job
+    runs inside it."""
+    from lagoon_spark import checkpointing
+    from lagoon_spark.operators import dedup
+
+    sc = lagoon.spark.sparkContext
+    base = "the quick brown fox jumps over the lazy dog and the cat. " * 3
+    other = "another page about the weather and the sea in winter number "
+    texts = [base + t for t in ("a", "a", "b", "c")] + [
+        f"{other}{i}. " * 3 for i in range(4)
+    ]
+    p = tmp_path / "b.csv"
+    p.write_text(
+        "txt,v\n" + "\n".join(f"{t},{i}" for i, t in enumerate(texts)) + "\n"
+    )
+    lagoon.ingest(str(p), "bud")
+
+    def group_jobs() -> set:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        group = sc.getLocalProperty("spark.jobGroup.id")
+        return set(sc.statusTracker().getJobIdsForGroup(group))
+
+    cc_calls = []
+    pins = []
+    cc, pin = dedup.connected_components, checkpointing.pin
+
+    def counted_pin(*args, **kwargs):
+        pins.append(1)
+        return pin(*args, **kwargs)
+
+    def traced_cc(*args, **kwargs):
+        before = group_jobs()
+        monkeypatch.setattr(checkpointing, "pin", counted_pin)
+        try:
+            out = cc(*args, **kwargs)
+        finally:
+            monkeypatch.setattr(checkpointing, "pin", pin)
+        cc_calls.append(len(group_jobs() - before))
+        return out
+
+    monkeypatch.setattr(dedup, "connected_components", traced_cc)
+    clean = _job_ids(
+        lagoon.spark, lambda: lagoon.clean_source("bud", "txt", rules="gopher")
+    )
+    dd = _job_ids(
+        lagoon.spark, lambda: lagoon.dedup_source("bud", "txt", min_matches=6)
+    )
+    # connected_components: only the edge collect (AQE runs the edge
+    # frame's two shuffle stages as jobs of their own). Before the
+    # driver tier: 18 jobs and 3 pins; clean_source 11, dedup_source 38
+    assert len(cc_calls) == 1 and cc_calls[0] <= 3 and pins == []
+    assert len(clean) <= 9, clean
+    assert len(dd) <= 22, dd
+    assert lagoon.catalog.get_source("bud").row_count == 2
+
+
+def test_ann_probe_from_another_engine_infers_once(spark, tmp_path):
+    """An engine probing an index another engine built infers the
+    schema of a cell-directory read once; later probes pass it in and
+    start no footer-inference job (full precision 2 jobs: the query
+    block's broadcast and the probe; driver-tier ADC 1: the codes
+    scan)."""
+    import json as _json
+
+    wh = str(tmp_path / "wh")
+    a = Lagoon(spark, wh, user="u")
+    a.init_db()
+    vecs = [[1.0, 0.01 * i, 0.0, 0.0] for i in range(8)]
+    vecs += [[0.0, 0.01 * i, 1.0, 0.0] for i in range(8)]
+    p = tmp_path / "two.json"
+    p.write_text("\n".join(_json.dumps(v) for v in vecs) + "\n")
+    a.ingest(str(p), "two", file_type="json")
+    a.build_ann_index("two", "data", k=2, iters=1, pq_m=2, pq_k=2)
+
+    b = Lagoon(spark, wh, user="u")
+    q = [1.0, 0.0, 0.0, 0.0]
+    full = lambda: b.ann_search("two", "data", q, topk=3, nprobe=2).collect()
+    adc = lambda: b.ann_search(
+        "two", "data", q, topk=3, nprobe=2, use_pq=True, rerank_factor=4
+    ).collect()
+    assert [r["ix"] for r in full()] == [r["ix"] for r in adc()] == [1, 2, 3]
+    assert len(_job_ids(spark, full)) <= 2
+    assert len(_job_ids(spark, adc)) <= 1
+
+
+def test_optimize_layout_on_another_session_moves_the_state_token(spark, tmp_path):
+    """A layout rewrite by an engine on another SparkSession changes no
+    catalog row, yet it moves the catalog's state token, so this
+    session's next sql() re-registers the views that pointed at the
+    deleted files, with no other catalog change in between."""
+    wh = str(tmp_path / "wh")
+    a = Lagoon(spark, wh, user="u")
+    a.init_db()
+    csv = "x,y\n" + "".join(f"{i},{i % 5}\n" for i in range(200))
+    info = a.ingest(_write(tmp_path, "o.csv", csv), "opt")
+    q = "SELECT count(*) AS n, sum(x) AS s FROM opt_v1_typed"
+    assert tuple(a.sql(q).collect()[0]) == (200, sum(range(200)))
+    token = a.catalog.state_token()
+
+    b = Lagoon(spark.newSession(), wh, user="u")
+    b.optimize_layout(info, ["y"], num_files=4)
+    assert a.catalog.state_token() != token
+    assert tuple(a.sql(q).collect()[0]) == (200, sum(range(200)))
+    assert tuple(b.sql(q).collect()[0]) == (200, sum(range(200)))
 
 
 def test_seeded_schemas_match_parquet_reads(lagoon, tmp_path):

@@ -90,8 +90,12 @@ def test_release_is_idempotent_and_safe_on_plain_frames(spark, sf_small):
     assert _persistent_rdd_count(spark) == 0
 
 
-def test_connected_components_drops_superseded_rounds(spark):
+def test_connected_components_drops_superseded_rounds(spark, monkeypatch):
     from lagoon_spark.operators import dedup
+
+    # the Spark tier is the one that pins; the driver tier would take
+    # this small graph
+    monkeypatch.setattr(dedup, "CC_DRIVER_MAX_EDGES", 0)
 
     # a 60-node chain forces many hash-min rounds and then the
     # large-star/small-star fallback — the worst case for checkpoint
