@@ -674,7 +674,6 @@ class _Cli:
 
     def cmd_sql(self):
         q = sys.stdin.read() if self.args.query == "-" else self.args.query
-        self.engine.register_metadata_views()
         for chunk in self.engine.export_query(q, fmt=self.args.format):
             sys.stdout.write(chunk)
         if self.args.format == "json_array":
@@ -694,7 +693,6 @@ class _Cli:
 
     def cmd_export_dataset(self):
         a = self.args
-        self.engine.register_metadata_views()
         self.engine.export_query_dataset(
             a.query,
             a.output,

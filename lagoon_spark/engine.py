@@ -1411,7 +1411,12 @@ class Lagoon:
         table directory identity; see :meth:`register_views`) are
         re-registered, and their reads carry remembered schemas, so no
         Spark job runs. Like the reference's views, which persist in
-        Postgres, a version's views are built once per change."""
+        Postgres, a version's views are built once per change.
+
+        This is the only caller of :meth:`register_metadata_views`: the
+        ``lagoon_sources`` / ``lagoon_columns`` / ``lagoon_tags`` views
+        are rebuilt on the same state-token miss, so callers (the
+        ``/sql`` route, ``lagoon sql``) need not register them."""
         from lagoon_spark.security import verify_user_query
 
         from lagoon_spark.functions.json_ops import (

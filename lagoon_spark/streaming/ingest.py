@@ -67,7 +67,7 @@ from lagoon_spark.ingest.infer import (
     rank_to_type,
 )
 from lagoon_spark.ingest.names import no_dup_names
-from lagoon_spark.ingest.rowid import with_ix
+from lagoon_spark.ingest.rowid import with_ix_count
 
 
 def _local(path: str) -> str:
@@ -393,12 +393,12 @@ class StreamIngestor:
             st, first_batch, data_path, self.engine._data_path(f"typed{st.ix}")
         ):
             lines = spark.read.text(paths).filter(F.trim(F.col("value")) != "")
-            batch = with_ix(lines).select(
+            numbered, n = with_ix_count(lines)
+            numbered.select(
                 (F.col("ix") + F.lit(st.row_count)).alias("ix"),
                 F.col("value").alias("c1"),
-            )
-            batch.write.mode("append").parquet(data_path)
-            total = self.engine._read_table(data_path).count()
+            ).write.mode("append").parquet(data_path)
+            total = st.row_count + n
             batch_frame = self.engine._read_table(data_path).filter(
                 F.col("ix") > st.row_count
             )
@@ -476,13 +476,13 @@ class StreamIngestor:
                 # this batch restores the backup wholesale.
                 self._rewrite_padded(data_path + ".__bak", data_path, new_width)
 
-            untyped = with_ix(csvmod.read_untyped(spark, paths, fmt, new_width))
-            untyped = untyped.select(
+            untyped, batch_rows = with_ix_count(
+                csvmod.read_untyped(spark, paths, fmt, new_width)
+            )
+            untyped.select(
                 (F.col("ix") + F.lit(st.row_count)).alias("ix"),
                 *[f"c{i + 1}" for i in range(new_width)],
-            )
-            untyped.write.mode("append").parquet(data_path)
-            batch_rows = self.engine._read_table(data_path).count() - st.row_count
+            ).write.mode("append").parquet(data_path)
 
             # incremental lattice fold: batch aggregate ⊔ running state
             phys = [f"c{i + 1}" for i in range(new_width)]
@@ -661,7 +661,7 @@ class StreamIngestor:
             # rename happens BEFORE ix assignment so an input field
             # literally named "ix" cannot collide (same discipline as
             # the one-shot parquet ingest)
-            native = with_ix(
+            native, batch_rows = with_ix_count(
                 df.select(
                     *[
                         (
@@ -672,7 +672,8 @@ class StreamIngestor:
                         for nm, p in zip(header, phys)
                     ]
                 )
-            ).select(
+            )
+            native = native.select(
                 (F.col("ix") + F.lit(st.row_count)).alias("ix"),
                 *phys,
             )
@@ -685,8 +686,7 @@ class StreamIngestor:
                 ],
             )
             untyped.write.mode("append").parquet(data_path)
-            total = self.engine._read_table(data_path).count()
-            batch_rows = total - st.row_count
+            total = st.row_count + batch_rows
 
             if first_batch:
                 self._overwrite(native.select("ix", *map(target_cast, phys)), typed_path)

@@ -616,3 +616,142 @@ def test_users_create_and_debug_routes(served):
     assert st == 200 and out is None
     # catalog still serves correctly after the cache drop
     assert _req(served, "GET", "/users")[2]
+
+
+# -- response framing and per-request cost --------------------------------
+
+
+def _conn(base):
+    import http.client
+    from urllib.parse import urlparse
+
+    u = urlparse(base)
+    return http.client.HTTPConnection(u.hostname, u.port, timeout=60)
+
+
+def _big_csv(rows: int = 4000) -> bytes:
+    # > 64 KiB of result in every format, so the handler's write buffer
+    # fills and flushes several times inside one response; the quoted
+    # field exercises RFC4180 escaping on the way back out
+    lines = ["n,s,q"] + [
+        f'{i},row-{i:05d}-{"x" * 40},"a,{i}"' for i in range(rows)
+    ]
+    return ("\r\n".join(lines) + "\r\n").encode()
+
+
+def test_keep_alive_requests_have_no_fixed_stall(served):
+    """A trivial route on a keep-alive connection answers in a few ms.
+    With Nagle on, a response written as headers then body waits for
+    the client's delayed ACK: a ~40 ms floor on every request."""
+    import statistics
+    import time
+
+    c = _conn(served)
+    hdrs = {"X-Lagoon-User": "admin"}
+    walls = []
+    for i in range(22):
+        t0 = time.perf_counter()
+        c.request("GET", "/sources", headers=hdrs)
+        r = c.getresponse()
+        assert r.status == 200 and r.read() == b"[]"
+        if i >= 2:  # the first requests warm the route
+            walls.append(time.perf_counter() - t0)
+    c.close()
+    assert statistics.median(walls) < 0.020, walls
+
+
+def test_streamed_bodies_unchanged_by_buffering(served, lagoon):
+    """De-chunked `/sql` bodies (csv, json, json_array) and a
+    `/download` body over one keep-alive connection are exactly the
+    engine's stream, and the download byte-roundtrips the upload."""
+    raw = _big_csv()
+    _, _, info = _req(served, "POST", "/sources?name=big", body=raw)
+    assert info["numRows"] == 4000
+    c = _conn(served)
+    hdrs = {"X-Lagoon-User": "admin"}
+
+    c.request("GET", f"/source/{info['ix']}/download", headers=hdrs)
+    r = c.getresponse()
+    assert r.getheader("Transfer-Encoding") == "chunked"
+    assert r.read() == raw
+
+    q = "SELECT n, s, q FROM big_v1_typed ORDER BY n"
+    for fmt in ("csv", "json", "json_array"):
+        c.request("POST", f"/sql?format={fmt}", body=q.encode(), headers=hdrs)
+        r = c.getresponse()
+        assert r.status == 200 and r.getheader("Transfer-Encoding") == "chunked"
+        body = r.read()
+        assert len(body) > 3 * (1 << 16)
+        assert body == "".join(lagoon.export_query(q, fmt=fmt)).encode(), fmt
+        if fmt == "csv":
+            assert body == raw
+        elif fmt == "json_array":
+            rows = json.loads(body)
+            assert len(rows) == 4000 and rows[7] == {
+                "n": 7, "s": f"row-00007-{'x' * 40}", "q": "a,7",
+            }
+    c.close()
+
+
+def test_denied_sql_is_a_bare_403(served):
+    """A denied query fails before any byte of a 200 is written: the
+    connection carries exactly one status line, a 403 with a JSON
+    error body, and is then closed."""
+    import socket
+    from urllib.parse import urlparse
+
+    _req(served, "POST", "/sources?name=mine", body=b"a\n1\n", user="alice")
+    u = urlparse(served)
+    for user, sql in (("admin", b"DROP TABLE mine_v1"),
+                      ("bob", b"SELECT * FROM mine_v1")):
+        s = socket.create_connection((u.hostname, u.port), timeout=60)
+        s.sendall(
+            b"POST /sql HTTP/1.1\r\nHost: x\r\nX-Lagoon-User: " + user.encode()
+            + b"\r\nContent-Length: " + str(len(sql)).encode() + b"\r\n\r\n" + sql
+        )
+        got = b""
+        while chunk := s.recv(1 << 16):  # the server closes after an error
+            got += chunk
+        s.close()
+        head, _, body = got.partition(b"\r\n\r\n")
+        assert head.startswith(b"HTTP/1.1 403 ") and got.count(b"HTTP/1.1") == 1
+        assert b"Transfer-Encoding" not in head
+        assert "error" in json.loads(body)
+
+
+def test_sql_metadata_views_follow_rest_writes(served):
+    """`lagoon_sources` / `lagoon_tags` see a dataset ingested and a
+    tag added over REST after the view memo warmed."""
+    _req(served, "POST", "/sources?name=first", body=b"a\n1\n")
+    q = b"SELECT name FROM lagoon_sources ORDER BY name"
+    assert _req(served, "POST", "/sql?format=json_array", body=q)[2] == [
+        {"name": "first"}
+    ]
+    _, _, second = _req(served, "POST", "/sources?name=second", body=b"a\n2\n")
+    assert _req(served, "POST", "/sql?format=json_array", body=q)[2] == [
+        {"name": "first"}, {"name": "second"}
+    ]
+    _req(served, "POST", f"/source/{second['ix']}/tags", body=["fresh"])
+    st, _, tags = _req(
+        served, "POST", "/sql?format=json_array",
+        body=b"SELECT source_ix, tag FROM lagoon_tags",
+    )
+    assert tags == [{"source_ix": second["ix"], "tag": "fresh"}]
+
+
+def test_sql_on_warm_memo_registers_no_metadata_views(served, monkeypatch):
+    """`Lagoon.sql` owns metadata-view registration: a `/sql` request
+    against an unchanged catalog rebuilds none of the views."""
+    from lagoon_spark.engine import Lagoon
+
+    _req(served, "POST", "/sources?name=spy", body=b"a\n1\n")
+    q = b"SELECT COUNT(*) AS n FROM lagoon_sources"
+    assert _req(served, "POST", "/sql?format=json", body=q)[2] == {"n": 1}
+    calls = []
+    real = Lagoon.register_metadata_views
+    monkeypatch.setattr(
+        Lagoon, "register_metadata_views",
+        lambda self: (calls.append(1), real(self))[1],
+    )
+    assert _req(served, "POST", "/sql?format=json", body=q)[2] == {"n": 1}
+    assert calls == []

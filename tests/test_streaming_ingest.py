@@ -526,3 +526,79 @@ class TestParquetAppend:
             lagoon.ingest_stream(
                 str(watch), "pqpin", checkpoint_dir=ckpt, mode="append"
             ).run_available()
+
+
+def _group_input_records(spark, group: str) -> int:
+    """Rows the scans of ``group``'s Spark jobs read (status store)."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    tracker = sc.statusTracker()
+    total = 0
+    for job in tracker.getJobIdsForGroup(group):
+        for sid in tracker.getJobInfo(job).stageIds:
+            # a skipped stage (its shuffle output reused) ran no tasks,
+            # and a long session's store may already have dropped it
+            if tracker.getStageInfo(sid) is not None:
+                total += int(store.lastStageAttempt(sid).inputRecords())
+    return total
+
+
+@pytest.mark.parametrize("fmt", ["csv", "json", "parquet"])
+def test_append_batch_reads_only_its_own_rows(lagoon, tmp_path, fmt):
+    """An append batch learns its row count from its own numbering, so
+    its Spark jobs read none of the earlier batches' rows; the catalog
+    row count matches the table after every batch, a rolled-back one
+    included."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    inbox = tmp_path / "inbox"
+    inbox.mkdir()
+    ing = lagoon.ingest_stream(
+        str(inbox), "grow", checkpoint_dir=str(tmp_path / "ckpt"), mode="append"
+    )
+    spark = lagoon.spark
+
+    def batch(i: int, lo: int, hi: int) -> None:
+        p = inbox / f"b{i}.{fmt}"
+        if fmt == "csv":
+            _write(p, "k,v\n" + "".join(f"{k},v{k}\n" for k in range(lo, hi)))
+        elif fmt == "json":
+            _write(p, "".join(f'{{"k": {k}}}\n' for k in range(lo, hi)))
+        else:
+            pq.write_table(pa.table({"k": list(range(lo, hi))}), str(p))
+        ing._batch_append([(str(p), datetime.datetime.now())], batch_id=i)
+
+    def rows_match(expected: int) -> None:
+        info = lagoon.catalog.get_source("grow", 1)
+        on_disk = spark.read.parquet(lagoon._data_path(info.table_name)).count()
+        assert info.row_count == on_disk == expected
+
+    batch(0, 0, 1500)
+    rows_match(1500)
+    batch(1, 1500, 3000)
+    rows_match(3000)
+
+    spark.sparkContext.setJobGroup("third-batch", "third append batch")
+    try:
+        batch(2, 3000, 3003)
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    rows_match(3003)
+    assert 0 < _group_input_records(spark, "third-batch") < 1500
+
+    def boom(*a, **kw):
+        raise RuntimeError("commit fails")
+
+    real = lagoon.catalog.update_source
+    lagoon.catalog.update_source = boom
+    try:
+        with pytest.raises(RuntimeError, match="commit fails"):
+            batch(3, 3003, 3010)
+    finally:
+        lagoon.catalog.update_source = real
+    rows_match(3003)
