@@ -976,6 +976,27 @@ def pq_fit_encode(
     searchable form in cluster memory. Codes compose with the IVF
     index (coarse cell + PQ residual is the classic IVFADC layout).
     """
+    books = _pq_train(
+        df, id_col, vec_col, m=m, k=k, iters=iters, dim=dim,
+        train_fraction=train_fraction,
+    )
+    return pq_encode(df, id_col, vec_col, books), books
+
+
+def _pq_train(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    *,
+    m: int,
+    k: int,
+    iters: int,
+    dim: int,
+    train_fraction: "float | None",
+) -> "list[list[list[float]]]":
+    """The training half of :func:`pq_fit_encode`: the codebooks
+    ``[m][k][dim/m]`` alone, for callers that encode through their own
+    :func:`pq_encode` call."""
     sub, rem = divmod(dim, m)
     if rem:
         raise ValueError(f"dim {dim} not divisible by m {m}")
@@ -1050,7 +1071,7 @@ def pq_fit_encode(
                 row_books[i] = r[f"__s{i}"] / denom
     if sampled:
         fit_df.unpersist()
-    return pq_encode(df, id_col, vec_col, books), books
+    return books
 
 
 def _pq_books_sql(books: "list[list[list[float]]]") -> str:

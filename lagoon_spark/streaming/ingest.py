@@ -115,6 +115,7 @@ class _AppendState:
             return cls(**json.load(f))
 
     def save(self, path: str) -> None:
+        os.makedirs(os.path.dirname(path), exist_ok=True)
         tmp = path + ".tmp"
         with open(tmp, "w") as f:
             json.dump(self.__dict__, f)
@@ -254,7 +255,6 @@ class StreamIngestor:
             return  # foreachBatch replay after recovery — already committed
         if not files:
             st.last_batch = batch_id
-            os.makedirs(os.path.dirname(self._state_path), exist_ok=True)
             st.save(self._state_path)
             return
         paths = [_local(p) for p, _ in files]
@@ -265,6 +265,36 @@ class StreamIngestor:
             self._batch_append_json(paths, batch_id, st)
         else:
             self._batch_append_tabular(paths, batch_id, st)
+        self.engine.register_views(self.engine.catalog.get_source_by_ix(st.ix))
+
+    def _open_source(self, st: _AppendState, fmt: str) -> "tuple[bool, str, str]":
+        """``(first_batch, table, view name)`` of the appended source.
+        The first batch creates its catalog row (tagged, invisible until
+        :meth:`_commit_batch`) and records its ix in ``st``."""
+        catalog = self.engine.catalog
+        if st.ix is not None:
+            info = catalog.get_source_by_ix(st.ix)
+            return False, info.table_name, info.view_name
+        st.ix, _version, table, view_name = catalog.new_source(
+            self.name,
+            url=self.directory,
+            description=self.description,
+            added_by=self.engine.user,
+            created=None,
+            fmt=fmt,
+        )
+        for t in self.tags or []:
+            catalog.tag(st.ix, t)
+        return True, table, view_name
+
+    def _commit_batch(self, st: _AppendState, first_batch: bool, batch_id: int) -> None:
+        """The last step inside a batch's rollback guard: the first
+        batch's source becomes visible, and the state file records the
+        batch as committed (replays of it are skipped)."""
+        if first_batch:
+            self.engine.catalog.finalize_source(st.ix)
+        st.last_batch = batch_id
+        st.save(self._state_path)
 
     def _classify(self, path: str) -> str:
         if self.file_type is not None:
@@ -372,22 +402,7 @@ class StreamIngestor:
 
         spark = self.engine.spark
         catalog = self.engine.catalog
-        first_batch = st.ix is None
-        if first_batch:
-            ix, _version, table, _view = catalog.new_source(
-                self.name,
-                url=self.directory,
-                description=self.description,
-                added_by=self.engine.user,
-                created=None,
-                fmt="json",
-            )
-            st.ix = ix
-            for t in self.tags or []:
-                catalog.tag(ix, t)
-        else:
-            table = catalog.get_source_by_ix(st.ix).table_name
-
+        first_batch, table, _view = self._open_source(st, "json")
         data_path = self.engine._data_path(table)
         with self._batch_rollback(
             st, first_batch, data_path, self.engine._data_path(f"typed{st.ix}")
@@ -413,13 +428,8 @@ class StreamIngestor:
             st.json_type = jsontype.render(merged)
             catalog.set_columns(st.ix, [("c1", "data", ColumnType.JSON.value)])
             catalog.update_source(st.ix, row_count=total, json_type=st.json_type)
-            if first_batch:  # commit: the appended source becomes visible
-                catalog.finalize_source(st.ix)
             st.row_count = total
-            st.last_batch = batch_id
-            os.makedirs(os.path.dirname(self._state_path), exist_ok=True)
-            st.save(self._state_path)
-        self.engine.register_views(catalog.get_source_by_ix(st.ix))
+            self._commit_batch(st, first_batch, batch_id)
 
     def _batch_append_tabular(self, paths, batch_id: int, st: _AppendState) -> None:
         spark = self.engine.spark
@@ -441,24 +451,9 @@ class StreamIngestor:
         fmt.quote = self.quote
 
         width, header, _bad = csvmod.scan_width(spark, paths, fmt)
-        first_batch = st.ix is None
+        first_batch, table, view_name = self._open_source(st, "tabular")
         if first_batch:
-            ix, _version, table, view_name = catalog.new_source(
-                self.name,
-                url=self.directory,
-                description=self.description,
-                added_by=self.engine.user,
-                created=None,
-                fmt="tabular",
-            )
-            st.ix = ix
             st.header = header
-            for t in self.tags or []:
-                catalog.tag(ix, t)
-        else:
-            info0 = catalog.get_source_by_ix(st.ix)
-            table = info0.table_name
-            view_name = info0.view_name
 
         new_width = max(width, st.width)
         data_path = self.engine._data_path(table)
@@ -545,16 +540,11 @@ class StreamIngestor:
                 typed_table_name=f"typed{st.ix}",
                 typed_view_name=f"{view_name}_typed",
             )
-            if first_batch:  # commit: the appended source becomes visible
-                catalog.finalize_source(st.ix)
             st.ranks = new_ranks
             st.lens = new_lens
             st.width = new_width
             st.row_count += batch_rows
-            st.last_batch = batch_id
-            os.makedirs(os.path.dirname(self._state_path), exist_ok=True)
-            st.save(self._state_path)
-        self.engine.register_views(catalog.get_source_by_ix(st.ix))
+            self._commit_batch(st, first_batch, batch_id)
 
     def _batch_append_parquet(
         self, paths, batch_id: int, st: _AppendState
@@ -622,25 +612,7 @@ class StreamIngestor:
             p in old_types and joined[p] != old_types[p] for p in joined
         )
 
-        first_batch = st.ix is None
-        if first_batch:
-            ix, _version, table, view_name = catalog.new_source(
-                self.name,
-                url=self.directory,
-                description=self.description,
-                added_by=self.engine.user,
-                created=None,
-                fmt="tabular",
-            )
-            st.ix = ix
-            st.header = header
-            for t in self.tags or []:
-                catalog.tag(ix, t)
-        else:
-            info0 = catalog.get_source_by_ix(st.ix)
-            table = info0.table_name
-            view_name = info0.view_name
-
+        first_batch, table, view_name = self._open_source(st, "tabular")
         data_path = self.engine._data_path(table)
         typed_path = self.engine._data_path(f"typed{st.ix}")
         needs_rewrite = bool(st.width) and new_width > st.width
@@ -741,16 +713,11 @@ class StreamIngestor:
                 typed_table_name=f"typed{st.ix}",
                 typed_view_name=f"{view_name}_typed",
             )
-            if first_batch:
-                catalog.finalize_source(st.ix)
             st.types = joined
             st.header = header
             st.width = new_width
             st.row_count = total
-            st.last_batch = batch_id
-            os.makedirs(os.path.dirname(self._state_path), exist_ok=True)
-            st.save(self._state_path)
-        self.engine.register_views(catalog.get_source_by_ix(st.ix))
+            self._commit_batch(st, first_batch, batch_id)
 
     @contextlib.contextmanager
     def _batch_rollback(
