@@ -28,8 +28,6 @@ Two narrow scans, no shuffle, no sort.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -39,8 +37,8 @@ from pyspark.sql import functions as F
 # PLAN TREE — driver memory, plan-serialization, and codegen all scale
 # with plan size, at exactly the sharded-ingest shape where group
 # count explodes. (Same literal-vs-broadcast tiering as
-# text.with_hashed_linear_score.) Env-tunable for tests.
-_MAP_LITERAL_MAX = int(os.environ.get("LAGOON_IX_MAP_LITERAL_MAX", "1000"))
+# text.with_hashed_linear_score.)
+_MAP_LITERAL_MAX = 1000
 
 
 def with_ix(df: DataFrame, ix_col: str = "ix") -> DataFrame:

@@ -91,20 +91,14 @@ def _ngrams_expr(toks_col: str, n: int):
 
 
 def _gram_key(gram_col):
-    """Gram join/shuffle key: 64-bit xxhash64 of the gram text
-    (default) or the raw string (``LAGOON_GRAM_KEYS=string``).
+    """Gram join/shuffle key: 64-bit xxhash64 of the gram text.
 
-    Hashing is the production representation — the gram pipelines
-    shuffle fixed 8-byte keys instead of n·token bytes (passage
-    removal's shuffle dropped 2.8× at 1M docs, SCALE_SMOKE_r10) and
-    per-pair collision odds are 2⁻⁶⁴. The string mode exists purely so
-    the small-scale cost of the extra per-occurrence hash is MEASURED,
-    not asserted (SCALE.md gram-representation table, round-10 verdict
-    #4); it is not a supported production configuration."""
-    import os
-
-    if os.environ.get("LAGOON_GRAM_KEYS", "hash") == "string":
-        return gram_col
+    The gram pipelines shuffle fixed 8-byte keys instead of n·token
+    bytes (passage removal's shuffle dropped 2.8× at 1M docs,
+    SCALE_SMOKE_r10) and per-pair collision odds are 2⁻⁶⁴. The
+    small-scale cost of the extra per-occurrence hash was measured
+    against raw string keys in GRAM_COST_r11.json (SCALE.md
+    gram-representation table)."""
     return F.xxhash64(gram_col)
 
 
@@ -423,9 +417,9 @@ def connected_components(
     **Spark tier.** Iterative hash-min label propagation: every round
     each node takes the min label among itself and its neighbours;
     converges in O(graph diameter) rounds (near-dup clusters are
-    shallow — a handful of rounds in practice). Above the threshold it
-    evaluates the edge frame a second time, to pin the undirected
-    edge set.
+    shallow — a handful of rounds in practice). Its pin of the
+    undirected edge set re-reads the driver tier's executed edge RDD
+    (:func:`_executed`), so the edge frame's shuffle stages run once.
 
     Scale notes: each round is one shuffle on node id (uniform key).
     Iterative DataFrame algorithms MUST truncate lineage per round —
@@ -455,20 +449,34 @@ def connected_components(
     """
     ends = edges.select(F.col(id_a), F.col(id_b))
     types = {f.dataType for f in ends.schema.fields}
-    if len(types) == 1 and isinstance(next(iter(types)), T.IntegralType):
-        pairs = ends.limit(CC_DRIVER_MAX_EDGES + 1).collect()
-        if len(pairs) <= CC_DRIVER_MAX_EDGES and all(
-            a is not None and b is not None for a, b in pairs
-        ):
-            labels = _driver_components(
-                edges.sparkSession, pairs, next(iter(types)), node_col
-            )
-            if nodes is None:
-                return labels
-            return labels.unionByName(
-                _isolated(nodes, labels.select(node_col), node_col)
-            )
-    return _spark_components(edges, nodes, id_a, id_b, node_col, max_iter)
+    if len(types) != 1 or not isinstance(next(iter(types)), T.IntegralType):
+        return _spark_components(ends, nodes, id_a, id_b, node_col, max_iter)
+    ends = _executed(ends)
+    pairs = ends.limit(CC_DRIVER_MAX_EDGES + 1).collect()
+    if len(pairs) <= CC_DRIVER_MAX_EDGES and all(
+        a is not None and b is not None for a, b in pairs
+    ):
+        labels = _driver_components(
+            edges.sparkSession, pairs, next(iter(types)), node_col
+        )
+        if nodes is None:
+            return labels
+        return labels.unionByName(
+            _isolated(nodes, labels.select(node_col), node_col)
+        )
+    return _spark_components(ends, nodes, id_a, id_b, node_col, max_iter)
+
+
+def _executed(df: DataFrame) -> DataFrame:
+    """``df`` over its own executed RDD, so that every action on the
+    result shares one evaluation of ``df``'s shuffle stages: AQE runs
+    them when the RDD is built, and later jobs find their map outputs
+    and skip them. Not ``persist()``: AQE materializes a cached relation
+    in a job of its own, which the driver tier would pay on every call."""
+    jdf = df.sparkSession._jsparkSession.internalCreateDataFrame(
+        df._jdf.queryExecution().toRdd(), df._jdf.schema(), False
+    )
+    return DataFrame(jdf, df.sparkSession)
 
 
 def _isolated(nodes: DataFrame, endpoints: DataFrame, node_col: str) -> DataFrame:

@@ -2,7 +2,7 @@
 
 Local mode is a single JVM; the configs below are still the ones that
 matter on a real cluster (AQE, shuffle partitions, Arrow) — see
-bench.py for the scale story.
+bench.py, the per-lane runner, and scale_smoke.py for the scale story.
 """
 
 from __future__ import annotations

@@ -998,19 +998,6 @@ def build_replica(spark, src_dir: str, out_dir: str, factor: int) -> float:
     return time.time() - t0
 
 
-_PLAN_OPS = (
-    "BroadcastHashJoin",
-    "SortMergeJoin",
-    "CartesianProduct",
-    "BroadcastNestedLoopJoin",
-    "ArrowEvalPython",
-    "BatchEvalPython",
-    "TakeOrderedAndProject",
-    "Exchange",
-    "HashAggregate",
-    "Window",
-)
-
 # strategy-bearing operators: these must NOT change between sf0.1 and
 # sf1 (Exchange/HashAggregate counts may legitimately differ under AQE)
 _STRATEGY_OPS = (
@@ -1040,48 +1027,31 @@ DEDUP_QUERIES = [
 def run_relational(
     spark, sf_dir: str, names: list[str], count_rows: bool = False
 ) -> dict:
-    """Execute each registry query against sf_dir through the noop sink
-    (everything computes, nothing lands on the driver).
+    """Measure each registry query against sf_dir with the bench
+    runner's per-lane function (one warm rep, one timed rep, noop sink).
 
-    Each query runs once UNTIMED first: the sf0.1 directory is page-
+    The untimed warm rep matters here: the sf0.1 directory is page-
     cache-warm from the rest of the session while the just-built
     replica is cold, so a single timed run charges the replica's
     first-touch IO to the big side only and inflates the ratio
     (round-7 profiling: q02 12.5× cold-vs-warm became 5.6× warm-vs-
     warm, q03 18.7× → 4.5×; zero spill either scale). Warm timings
-    are the scaling signal; first-touch IO is a separate, linear cost."""
-    from lagoon_spark.queries import get_query
+    are the scaling signal; first-touch IO is a separate, linear cost.
+    ``count_rows`` adds each query's output row count, from an untimed
+    run of its own."""
+    from bench import run_lane
 
     from lagoon_spark.checkpointing import release
+    from lagoon_spark.queries import get_query
 
     out = {}
     for name in names:
-        df = get_query(name).spark_fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()  # warm, untimed
-        # the timed run gets a FRESH plan (round-12): re-writing the
-        # SAME DataFrame reuses the warm run's checkpoint-pinned CC
-        # intermediates, so a pinned lane's "wall" measured only the
-        # post-checkpoint tail. The timer starts BEFORE spark_fn: the
-        # iterative lanes (connected components) do their real work
-        # eagerly at construction time — checkpoint + count per round —
-        # so a timer that starts at the noop write measures only the
-        # member-expansion tail (q69 at 50k docs: 0.22 s timed-at-write
-        # vs ~6 s with construction included). Page cache and codegen
-        # stay warm — that is the warm-vs-warm intent — but the
-        # engine's own work must be inside the measurement.
-        release(df)
-        t0 = time.time()
-        df = get_query(name).spark_fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        wall = time.time() - t0
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        out[name] = {
-            "wall_sec": round(wall, 3),
-            "ops": {op: plan.count(op) for op in _PLAN_OPS if op in plan},
-        }
+        rec = run_lane(spark, name, sf_dir, reps=1)
+        out[name] = {"wall_sec": rec["wall"], "ops": rec["ops"]}
         if count_rows:
+            df = get_query(name).spark_fn(spark, sf_dir)
             out[name]["rows"] = df.count()
-        release(df)  # free the lane's pinned intermediates
+            release(df)
     return out
 
 

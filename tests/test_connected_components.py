@@ -78,3 +78,40 @@ def test_threshold_picks_the_tier(spark):
     )
     release(above)
     assert at.count() == 2 * t
+
+
+def test_spark_tier_evaluates_the_edge_frame_once(spark, monkeypatch):
+    """Above the threshold the driver tier's collect and the Spark
+    tier's edge pin share one evaluation of the edge frame: the stages
+    below its join's shuffle run once, so a Python UDF feeding the
+    join is called as often as in one evaluation of the frame."""
+    from pyspark.sql import functions as F
+
+    seen = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def key(x):
+        seen.add(1)
+        return x
+
+    n = 400
+    left = spark.range(n, numPartitions=4).select(key("id").alias("k"))
+    right = spark.range(n, numPartitions=4).select(
+        F.col("id").alias("k"), (F.col("id") - F.col("id") % 4).alias("root")
+    )
+    edges = left.hint("shuffle_merge").join(right, "k").select(
+        F.col("k").alias("id_a"), F.col("root").alias("id_b")
+    )
+    # one evaluation's count: the optimizer may call the UDF more than
+    # once per row (an inferred not-null filter repeats it)
+    edges.write.format("noop").mode("overwrite").save()
+    once, seen.value = seen.value, 0
+    assert once >= n
+
+    monkeypatch.setattr(dedup, "CC_DRIVER_MAX_EDGES", 0)
+    out = dedup.connected_components(edges)
+    assert handles(out) != ()
+    got = dict(map(tuple, out.collect()))
+    release(out)
+    assert seen.value == once
+    assert got == {i: i - i % 4 for i in range(n)}
