@@ -16,7 +16,6 @@ from __future__ import annotations
 
 import functools
 import os
-import tempfile
 from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
@@ -32,68 +31,15 @@ from lagoon_spark.ingest.infer import (
     cast_expr,
     infer_column_types,
 )
-from lagoon_spark.ingest.names import no_dup_names, sanitize
+from lagoon_spark.ingest.load import (
+    LoadState,
+    infer_jsontype_distributed,
+    json_needs_splitting,
+    load,
+    padded,
+)
+from lagoon_spark.ingest.names import sanitize
 from lagoon_spark.ingest.rowid import with_ix, with_ix_count
-
-
-#: lattice type → Spark cast target for schema-native (parquet) columns
-PARQUET_NATIVE_CAST = {
-    "BOOLEAN": "boolean",
-    "INTEGER": "int",
-    "BIGINT": "long",
-    "DOUBLE PRECISION": "double",
-}
-
-#: widening order of the schema-native numeric chain (parquet append's
-#: incremental lattice: INTEGER ⊔ BIGINT = BIGINT, int ⊔ real = real)
-_PARQUET_NUM_RANK = {"INTEGER": 0, "BIGINT": 1, "DOUBLE PRECISION": 2}
-
-
-def parquet_lattice(dt) -> str:
-    """Schema-native Spark type → reference lattice type (the parquet
-    ingest's skip-the-two-pass-inference mapping; shared by the
-    streaming append path)."""
-    from pyspark.sql import types as T
-
-    if isinstance(dt, T.BooleanType):
-        return "BOOLEAN"
-    if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType)):
-        return "INTEGER"
-    if isinstance(dt, T.LongType):
-        return "BIGINT"
-    if isinstance(dt, (T.FloatType, T.DoubleType)):
-        return "DOUBLE PRECISION"
-    if isinstance(dt, T.DecimalType) and dt.precision <= 15:
-        return "DOUBLE PRECISION"
-    return "TEXT"
-
-
-def parquet_join(a: str, b: str) -> str:
-    """Join of two schema-native lattice types across batches: equal
-    types stay, the numeric chain widens to its max (I4 ⊔ I8 = I8,
-    int ⊔ real = real), every other combination re-casts to TEXT —
-    including BOOLEAN ⊔ numeric, where the text lattice's Postgres
-    cast would fail ('true'::INTEGER); schema-native evidence is
-    definitive, so the join degrades safely instead."""
-    if a == b:
-        return a
-    if a in _PARQUET_NUM_RANK and b in _PARQUET_NUM_RANK:
-        return a if _PARQUET_NUM_RANK[a] >= _PARQUET_NUM_RANK[b] else b
-    return "TEXT"
-
-
-def parquet_canon(p: str, dt) -> "F.Column":
-    """Canonical UNTYPED string rendering of a schema-native column
-    (binary → base64, nested → JSON text, scalars → their Spark string
-    form)."""
-    from pyspark.sql import types as T
-
-    c = F.col(p)
-    if isinstance(dt, T.BinaryType):
-        return F.base64(c)
-    if isinstance(dt, (T.ArrayType, T.MapType, T.StructType)):
-        return F.to_json(c)
-    return c.cast("string")
 
 
 def _double_lit(v: "float | None") -> str:
@@ -272,6 +218,20 @@ class Lagoon:
         )
         self._table_schemas[path] = (_dir_key(path), schema)
 
+    def _append_table(self, df: DataFrame, path: str) -> None:
+        """Add ``df``'s rows to the engine-owned table at ``path``; they
+        share its schema, which stays remembered."""
+        df.write.mode("append").parquet(path)
+        self._table_schemas[path] = (_dir_key(path), _as_nullable(df.schema))
+
+    def _move_table(self, src: str, dst: str) -> None:
+        """Rename the table directory ``src`` to ``dst``; a rename keeps
+        the directory's identity, so its remembered schema moves too."""
+        os.rename(src, dst)
+        hit = self._table_schemas.pop(src, None)
+        if hit is not None:
+            self._table_schemas[dst] = hit
+
     def _read_table(self, path: str, *parts: str) -> DataFrame:
         """Read the engine-owned table at ``path`` (with ``parts``: only
         those partition directories of it). While the directory is the
@@ -324,6 +284,17 @@ class Lagoon:
         public: bool | None = None,
         progress=None,
     ) -> SourceInfo:
+        """Ingest one file, directory or glob as a new version of
+        ``name``. This method owns what only a one-shot ingest does:
+        the permission and visibility checks, the source-identifier
+        (SUID) short-circuit, input acquisition (URL fetch, zip spool,
+        UTF-16 transcode), tags, ACLs and the final commit that makes
+        the version visible. Turning the input into tables and catalog
+        columns is the per-format loader of ``ingest/load.py``, run as
+        the first batch on an empty state — the same code a streaming
+        append runs for each of its batches. ``progress`` receives the
+        phase events ``input``, ``encoding``, ``format``, ``loaded``,
+        ``typed`` and ``done``."""
         from lagoon_spark import security as _sec
 
         # A17: source-identifier dedup — if a source already carries the
@@ -500,24 +471,18 @@ class Lagoon:
                 if codec:
                     local = csvmod.transcode_to_utf8(local, codec, cleanup)
                     emit({"event": "encoding", "detected": codec})
-            if ftype == "parquet":
-                info = self._ingest_parquet(
-                    local, name, description=description, created=created,
-                    url=url, emit=emit,
-                )
-            elif ftype == "json":
-                info = self._ingest_json(
-                    local, name, description=description, created=created, url=url,
-                    json_path=json_path, emit=emit, probe_path=probe,
-                )
-            else:
-                info = self._ingest_tabular(
-                    local, name, description=description, created=created, url=url,
-                    has_headers=has_headers, delimiter=delimiter, quote=quote,
-                    no_type_inference=no_type_inference, peek_rows=peek_rows,
-                    probe_path=probe,
-                    emit=emit,
-                )
+            # the CSV dialect of a tabular input (a path guess, no IO)
+            dialect = csvmod.guess_format(probe or local)
+            dialect.has_headers, dialect.quote = has_headers, quote
+            dialect.peek_rows = peek_rows
+            if delimiter is not None:
+                dialect.delimiter = delimiter
+            info = load(
+                self, ftype, [local], LoadState(), name=name, url=url,
+                description=description, created=created, dialect=dialect,
+                probe=probe, json_path=json_path,
+                no_type_inference=no_type_inference, emit=emit,
+            )
         finally:
             for f in cleanup:
                 if os.path.exists(f):
@@ -546,167 +511,6 @@ class Lagoon:
         emit({"event": "done", "ix": out.ix, "version": out.version, "rows": out.row_count})
         return out
 
-    def _ingest_tabular(
-        self, path, name, *, description, created, url, has_headers,
-        delimiter, quote, no_type_inference, peek_rows, emit=lambda e: None,
-        probe_path: str | None = None,
-    ) -> SourceInfo:
-        # sharded ingest probes (format guess, strict encoding decode,
-        # raw header bytes) run on the first shard; distributed scans
-        # take the glob/dir itself
-        probe = probe_path or path
-        fmt = csvmod.guess_format(probe)
-        fmt.has_headers = has_headers
-        fmt.peek_rows = peek_rows
-        if delimiter is not None:
-            fmt.delimiter = delimiter
-        fmt.quote = quote
-
-        width, header, saw_bad = csvmod.scan_width(self.spark, path, fmt)
-        # encoding fallback (`Ingest.hs:138-148`): the distributed scan
-        # flagged undecodable bytes; confirm with a strict driver decode,
-        # then re-read everything as Latin1 (header included)
-        if saw_bad and fmt.encoding.upper() in ("UTF-8", "UTF8") and csvmod.utf8_invalid(probe):
-            fmt.encoding = "ISO-8859-1"
-            if fmt.has_headers:
-                header = csvmod.read_header_bytes(probe, fmt, "iso-8859-1")
-            emit({"event": "encoding", "fallback": "ISO-8859-1"})
-        emit({"event": "format", "width": width, "has_headers": bool(has_headers and header)})
-        ix, version, table_name, view_name = self.catalog.new_source(
-            name, url=url, description=description, added_by=self.user,
-            created=created, fmt="tabular",
-        )
-        try:
-            untyped, row_count = with_ix_count(
-                csvmod.read_untyped(self.spark, path, fmt, width)
-            )
-            untyped = untyped.select("ix", *[f"c{i+1}" for i in range(width)])
-            self._write_table(untyped, self._data_path(table_name))
-            stored = self._read_table(self._data_path(table_name))
-            emit({"event": "loaded", "rows": row_count})
-
-            # friendly headers (A11/A12): sanitized, deduped; headerless
-            # files keep the physical names (`DataFormat.hs:103-108`)
-            phys = [f"c{i+1}" for i in range(width)]
-            if has_headers and header:
-                preferred = list(header) + phys[len(header):]
-            else:
-                preferred = phys
-            friendly = no_dup_names(preferred)
-
-            # A5/A10: inference pass + typed materialization
-            if no_type_inference:
-                cols = [(p, h, ColumnType.TEXT.value) for p, h in zip(phys, friendly)]
-                typed_table = typed_view = None
-            else:
-                inferred = infer_column_types(stored, phys)
-                cols = [
-                    (p, h, ic.type.value)
-                    for (p, h), ic in zip(zip(phys, friendly), inferred)
-                ]
-                typed_table = f"typed{ix}"
-                typed_view = f"{view_name}_typed"
-                typed_df = stored.select(
-                    "ix",
-                    *[
-                        cast_expr(ic.name, ic.type).alias(ic.name)
-                        for ic in inferred
-                    ],
-                )
-                self._write_table(typed_df, self._data_path(typed_table))
-                emit({"event": "typed", "columns": [(h, t) for _p, h, t in cols]})
-
-            self.catalog.set_columns(ix, cols)
-            self.catalog.update_source(
-                ix, row_count=row_count,
-                typed_table_name=typed_table, typed_view_name=typed_view,
-            )
-            # NOT finalized here: _ingest_locked commits after tags/ACLs
-        except BaseException:
-            self._rollback_ingest(ix, table_name, f"typed{ix}")
-            raise
-        info = self.catalog.get_source_by_ix(ix)
-        self.register_views(info)
-        return info
-
-    def _ingest_parquet(
-        self, path, name, *, description, created, url, emit=lambda e: None,
-    ) -> SourceInfo:
-        """Parquet-native ingest — beyond the reference (whose inputs
-        are CSV/JSON), because the 100 TB landing format IS parquet
-        (crawl output, upstream pipeline shards). Column types come
-        from the file schema, so the two-pass inference is skipped:
-        schema-native scalars map straight into the reference lattice
-        (bool/int/bigint/double; decimals beyond double precision,
-        dates, timestamps → TEXT; arrays/structs/maps → their JSON
-        text; binary → base64). A directory or glob of shards reads as
-        one source with filename-major row ids, like sharded CSV.
-
-        The UNTYPED table stores canonical string renderings — every
-        downstream invariant (download roundtrip, compaction's
-        row-content matching, ``set_column_type`` re-casts) assumes
-        text there; the typed table lands directly from the native
-        columns, no string round-trip."""
-        df = self.spark.read.parquet(path)
-        fields = df.schema.fields
-        if not fields:
-            raise ValueError(f"{path} has no columns")
-        width = len(fields)
-        phys = [f"c{i+1}" for i in range(width)]
-        canon = parquet_canon
-        lattice = parquet_lattice
-        _NATIVE = PARQUET_NATIVE_CAST
-
-        # rename to physical c1..cn BEFORE ix assignment so a source
-        # column literally named "ix" cannot collide
-        raw, row_count = with_ix_count(
-            df.select(*[F.col(f.name).alias(p) for f, p in zip(fields, phys)])
-        )
-        emit({"event": "format", "width": width, "schema_native": True})
-        ix, _version, table_name, view_name = self.catalog.new_source(
-            name, url=url, description=description, added_by=self.user,
-            created=created, fmt="tabular",
-        )
-        try:
-            untyped = raw.select(
-                "ix", *[canon(p, f.dataType).alias(p) for p, f in zip(phys, fields)]
-            )
-            self._write_table(untyped, self._data_path(table_name))
-            emit({"event": "loaded", "rows": row_count})
-
-            friendly = no_dup_names([f.name for f in fields])
-            cols = [
-                (p, h, lattice(f.dataType))
-                for p, h, f in zip(phys, friendly, fields)
-            ]
-            typed_table = f"typed{ix}"
-            typed_view = f"{view_name}_typed"
-            typed_df = raw.select(
-                "ix",
-                *[
-                    (
-                        F.col(p).cast(_NATIVE[t])
-                        if t in _NATIVE
-                        else canon(p, f.dataType)
-                    ).alias(p)
-                    for (p, _h, t), f in zip(cols, fields)
-                ],
-            )
-            self._write_table(typed_df, self._data_path(typed_table))
-            emit({"event": "typed", "columns": [(h, t) for _p, h, t in cols]})
-            self.catalog.set_columns(ix, cols)
-            self.catalog.update_source(
-                ix, row_count=row_count,
-                typed_table_name=typed_table, typed_view_name=typed_view,
-            )
-            # NOT finalized here: _ingest_locked commits after tags/ACLs
-        except BaseException:
-            self._rollback_ingest(ix, table_name, f"typed{ix}")
-            raise
-        info = self.catalog.get_source_by_ix(ix)
-        self.register_views(info)
-        return info
-
     def _rollback_ingest(self, ix: int, *tables: str) -> None:
         """A failed ingest must leave NO trace: remove the catalog rows
         registered up front and any partially written data directories,
@@ -727,101 +531,6 @@ class Lagoon:
             self.catalog.delete_source(ix)
         except Exception:  # pragma: no cover - never mask the real error
             pass
-
-    def _ingest_json(
-        self, path, name, *, description, created, url, json_path,
-        emit=lambda e: None, probe_path: str | None = None,
-    ) -> SourceInfo:
-        """JSON ingest (`Ingest.hs:231-255`): one TEXT column holding the
-        raw value per row (JSON sources never get a typed table,
-        `Ingest.hs:257-262`); JsonType inferred over all values.
-
-        JSONL without a json-path streams distributed via read.text; a
-        json-path (or multi-line values) goes through the constant-memory
-        driver splitter into a spooled JSONL file first.
-        """
-        ix, version, table_name, view_name = self.catalog.new_source(
-            name, url=url, description=description, added_by=self.user,
-            created=created, fmt="json",
-        )
-        spool = None
-        try:
-            if json_path is not None or self._json_needs_splitting(probe_path or path):
-                if probe_path is not None:
-                    raise ValueError(
-                        "sharded JSON ingest requires JSONL shards (one value "
-                        "per line); multi-line documents need per-file ingest"
-                    )
-                jpath = jsonsplit.parse_path(json_path) if json_path else jsonsplit.HERE
-                spool = tempfile.NamedTemporaryFile(
-                    "w", suffix=".jsonl", delete=False, encoding="utf-8"
-                )
-                with open(path, encoding="utf-8") as f:
-                    for raw in jsonsplit.split_values(f, jpath):
-                        spool.write(raw.replace("\n", " ") + "\n")
-                spool.close()
-                src = spool.name
-            else:
-                src = path
-
-            lines = self.spark.read.text(src).withColumnRenamed("value", "c1")
-            lines = lines.filter(F.trim(F.col("c1")) != "")
-            untyped, row_count = with_ix_count(lines)
-            self._write_table(
-                untyped.select("ix", "c1"), self._data_path(table_name)
-            )
-            stored = self._read_table(self._data_path(table_name))
-            emit({"event": "loaded", "rows": row_count})
-
-            # distributed JsonType inference: Arrow-batched fold, driver
-            # reduce. A malformed value fails the fold worker-side; the
-            # rollback below then erases the half-ingested source.
-            jt = _infer_jsontype_distributed(stored, "c1")
-
-            self.catalog.set_columns(ix, [("c1", "data", ColumnType.JSON.value)])
-            self.catalog.update_source(
-                ix, row_count=row_count, json_type=jsontype.render(jt)
-            )
-            # NOT finalized here: _ingest_locked commits after tags/ACLs
-        except BaseException as e:
-            self._rollback_ingest(ix, table_name)
-            # unwrap the worker-side splitter error to the same clean
-            # exception the driver-side splitter raises
-            msg = str(e)
-            if type(e).__name__ == "PythonException" and "JsonSplitError" in msg:
-                tail = msg.split("JsonSplitError:", 1)[1].strip().splitlines()
-                raise jsonsplit.JsonSplitError(
-                    tail[0] if tail else "malformed JSON value"
-                ) from e
-            raise
-        finally:
-            if spool is not None and os.path.exists(spool.name):
-                os.unlink(spool.name)
-        info = self.catalog.get_source_by_ix(ix)
-        self.register_views(info)
-        return info
-
-    @staticmethod
-    def _json_needs_splitting(path: str, probe_bytes: int = 1 << 16) -> bool:
-        """JSONL (one value per line) can skip the driver splitter."""
-        import json as _json
-
-        with open(path, encoding="utf-8") as f:
-            probe = f.read(probe_bytes)
-            more = bool(f.read(1))
-        lines = probe.splitlines()
-        if more and lines:
-            lines = lines[:-1]  # last line may be truncated by the probe
-        if not lines:
-            return False
-        for line in lines:
-            if not line.strip():
-                continue
-            try:
-                _json.loads(line)
-            except ValueError:
-                return True
-        return False
 
     # -- views ---------------------------------------------------------------
 
@@ -1031,9 +740,7 @@ class Lagoon:
                 "original data left untouched"
             )
         shutil.rmtree(path)
-        os.rename(tmp, path)
-        schema = self._table_schemas.pop(tmp)[1]
-        self._table_schemas[path] = (_dir_key(path), schema)
+        self._move_table(tmp, path)
         # no catalog row changed; move the state token anyway, so other
         # sessions' sql() views stop reading the deleted files
         self.catalog.note_data_rewrite(info.ix, table)
@@ -1090,7 +797,7 @@ class Lagoon:
         """
         import json as _json
 
-        if json_path is not None or self._json_needs_splitting(path):
+        if json_path is not None or json_needs_splitting(path):
             jpath = jsonsplit.parse_path(json_path) if json_path else jsonsplit.HERE
             jt = jsontype.UNKNOWN
             with open(path, encoding="utf-8") as f:
@@ -1099,7 +806,7 @@ class Lagoon:
             return jsontype.render(jt)
 
         lines = self.spark.read.text(path).filter(F.trim(F.col("value")) != "")
-        return jsontype.render(_infer_jsontype_distributed(lines, "value"))
+        return jsontype.render(infer_jsontype_distributed(lines, "value"))
 
     # -- delete (A27) --------------------------------------------------------
 
@@ -3303,8 +3010,6 @@ class Lagoon:
         guarantee). Per-version views filter ``array_contains(ixs, v)``
         (`DB/ColumnSpec.hs:117-144`).
         """
-        from pyspark.sql import Window as W
-
         versions = self.catalog.versions(name)
         if not versions:
             raise KeyError(f"no source named {name!r}")
@@ -3330,33 +3035,22 @@ class Lagoon:
         ):
             return self._compact_incremental(name, infos, tables, phys)
 
-        frames = []
-        for info, df in tables:
-            if "ixs" in df.columns:
+        grouped = _occurrence_groups(
+            [
                 # already-compacted source: membership lives in the ixs
                 # array — take only this version's rows (found by the
                 # compaction property test: recompacting otherwise
                 # attributes every version's rows to each version)
-                df = df.filter(F.array_contains("ixs", info.version)).drop("ixs")
-            for c in phys:
-                if c not in df.columns:
-                    df = df.withColumn(c, F.lit(None).cast("string"))
-            frames.append(
-                df.select(
-                    F.lit(info.version).alias("__v"),
-                    F.col("ix").alias("__orig_ix"),
-                    *phys,
+                (
+                    info.version,
+                    df.filter(F.array_contains("ixs", info.version))
+                    if "ixs" in df.columns
+                    else df,
                 )
-            )
-        allv = frames[0]
-        for fdf in frames[1:]:
-            allv = allv.unionByName(fdf)
-
-        occ_w = W.partitionBy(*phys, "__v").orderBy("__orig_ix")
-        occ = allv.withColumn("__occ", F.row_number().over(occ_w))
-        grouped = occ.groupBy(*phys, "__occ").agg(
-            F.sort_array(F.collect_set("__v")).alias("ixs"),
-            F.min(F.col("__v") * F.lit(10**12) + F.col("__orig_ix")).alias("__ord"),
+                for info, df in tables
+            ],
+            phys,
+            "ixs",
         )
         # Dense 1-based ix in __ord order WITHOUT a global single-task
         # window (the round-1/2 scale-killer): dense_order_ix range-
@@ -3398,38 +3092,11 @@ class Lagoon:
         from lagoon_spark.ingest.rowid import dense_order_ix
 
         base = next(df for i, df in tables if "ixs" in df.columns)
-        for c in phys:
-            if c not in base.columns:
-                base = base.withColumn(c, F.lit(None).cast("string"))
-        base = base.select("ix", *phys, "ixs")
-
-        frames = []
-        for info, df in tables:
-            if "ixs" in df.columns:
-                continue
-            for c in phys:
-                if c not in df.columns:
-                    df = df.withColumn(c, F.lit(None).cast("string"))
-            frames.append(
-                df.select(
-                    F.lit(info.version).alias("__v"),
-                    F.col("ix").alias("__orig_ix"),
-                    *phys,
-                )
-            )
-        allv = frames[0]
-        for fdf in frames[1:]:
-            allv = allv.unionByName(fdf)
-        occ_w = W.partitionBy(*phys, "__v").orderBy("__orig_ix")
-        delta = (
-            allv.withColumn("__occ", F.row_number().over(occ_w))
-            .groupBy(*phys, "__occ")
-            .agg(
-                F.sort_array(F.collect_set("__v")).alias("__new_ixs"),
-                F.min(F.col("__v") * F.lit(10**12) + F.col("__orig_ix")).alias(
-                    "__ord"
-                ),
-            )
+        base = base.select("ix", *padded(base, phys), "ixs")
+        delta = _occurrence_groups(
+            [(i.version, df) for i, df in tables if "ixs" not in df.columns],
+            phys,
+            "__new_ixs",
         )
 
         k_w = W.partitionBy(*phys).orderBy("ix")
@@ -3615,42 +3282,36 @@ class Lagoon:
         )
 
 
-def _infer_jsontype_distributed(df: DataFrame, col: str):
-    """JsonType of a string column: Arrow-batched executor fold, driver
-    lattice reduce.
+def _occurrence_groups(versions, phys: list[str], ixs: str) -> DataFrame:
+    """Compaction's row matching (`Ingest.hs:342-428`): the rows of
+    ``versions`` — (version, frame) pairs — padded to ``phys`` and
+    grouped by (content, occurrence), so the k-th occurrence of
+    identical content in every version is one group and per-version
+    multiplicity is preserved. Each group carries its sorted member
+    versions as ``ixs`` and ``__ord``, the min of v·10¹² + orig ix,
+    which is unique per group and orders the merged table."""
+    from pyspark.sql import Window as W
 
-    The round-1/2 verdict's second Python-row-path fix: values arrive as
-    Arrow batches (``mapInPandas`` — no per-row pickling), each task
-    folds its batches through the unification lattice and emits ONE
-    rendered type string; the driver parses and unifies #tasks partial
-    types. ``json.loads`` per value is inherent (the lattice needs the
-    parsed shape), but all row-granular transfer overhead is gone.
-    """
-    import json as _json
-
-    import pandas as pd
-
-    def scan(batches):
-        t = jsontype.UNKNOWN
-        for pdf in batches:
-            for s in pdf[col]:
-                try:
-                    parsed = _json.loads(s)
-                except ValueError as err:
-                    # surfaces driver-side as the same clean splitter
-                    # error a malformed document raises (the ingest
-                    # rollback keys on the exception name)
-                    raise jsonsplit.JsonSplitError(
-                        f"invalid JSON value {s[:80]!r}: {err}"
-                    ) from None
-                t = jsontype.unify(t, jsontype.type_of_value(parsed))
-        yield pd.DataFrame({"t": [jsontype.render(t)]})
-
-    parts = df.select(col).mapInPandas(scan, "t string").collect()
-    jt = jsontype.UNKNOWN
-    for r in parts:
-        jt = jsontype.unify(jt, jsontype.parse(r["t"]))
-    return jt
+    allv = functools.reduce(
+        DataFrame.unionByName,
+        [
+            df.select(
+                F.lit(v).alias("__v"),
+                F.col("ix").alias("__orig_ix"),
+                *padded(df, phys),
+            )
+            for v, df in versions
+        ],
+    )
+    occ_w = W.partitionBy(*phys, "__v").orderBy("__orig_ix")
+    return (
+        allv.withColumn("__occ", F.row_number().over(occ_w))
+        .groupBy(*phys, "__occ")
+        .agg(
+            F.sort_array(F.collect_set("__v")).alias(ixs),
+            F.min(F.col("__v") * F.lit(10**12) + F.col("__orig_ix")).alias("__ord"),
+        )
+    )
 
 
 def _csv_line(fields: list[str]) -> str:

@@ -113,20 +113,31 @@ def rank_to_type(rank: int, max_len: int) -> ColumnType:
     }[rank]
 
 
-def infer_column_types(df: DataFrame, cols: list[str] | None = None) -> list[InferredColumn]:
-    """Pass 1: one aggregation job → per-column lattice rank + max length."""
-    cols = cols or df.columns
+def column_ranks(df: DataFrame, cols: list[str]) -> dict[str, tuple[int, int]]:
+    """Pass 1: one aggregation job → per-column (lattice rank, max
+    length). Both are maxima, so the ranks of two batches join by
+    taking the larger of each."""
     aggs = []
     for c in cols:
         aggs.append(F.max(rank_expr(c)).alias(f"__r_{c}"))
         aggs.append(F.max(F.length(F.col(c))).alias(f"__l_{c}"))
     row = df.agg(*aggs).collect()[0]
-    out = []
-    for c in cols:
-        rank = row[f"__r_{c}"] if row[f"__r_{c}"] is not None else R_ABSENT
-        max_len = row[f"__l_{c}"] if row[f"__l_{c}"] is not None else 0
-        out.append(InferredColumn(c, rank_to_type(rank, max_len), max_len))
-    return out
+    return {
+        c: (
+            row[f"__r_{c}"] if row[f"__r_{c}"] is not None else R_ABSENT,
+            row[f"__l_{c}"] if row[f"__l_{c}"] is not None else 0,
+        )
+        for c in cols
+    }
+
+
+def infer_column_types(df: DataFrame, cols: list[str] | None = None) -> list[InferredColumn]:
+    """Pass 1 as the columns' lattice types."""
+    ranks = column_ranks(df, cols or df.columns)
+    return [
+        InferredColumn(c, rank_to_type(rank, max_len), max_len)
+        for c, (rank, max_len) in ranks.items()
+    ]
 
 
 def cast_expr(c: str, ctype: ColumnType) -> Column:

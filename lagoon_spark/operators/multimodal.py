@@ -492,19 +492,9 @@ def decode_images(
     """
     from lagoon_spark.operators import native_media as nm
 
-    if tier not in ("auto", "stdlib", "native"):
-        raise ValueError(f"tier must be auto|stdlib|native, got {tier!r}")
-    env = nm.media_tier()
-    eff = env if env != "auto" else tier
-    if eff == "native" or (
-        eff == "auto"
-        and media_type in nm.NATIVE_AUTO_TYPES
-        and nm.register(df.sparkSession)
+    if nm.resolve_tier(
+        df.sparkSession, tier, auto_native=media_type in nm.NATIVE_AUTO_TYPES
     ):
-        if eff == "native" and not nm.register(df.sparkSession):
-            raise RuntimeError(
-                "native media tier requested but unavailable (no JDK?)"
-            )
         return nm.decode_images_native(df, id_col, content_col)
     codec = _load_codec(media_type)
 
@@ -598,15 +588,7 @@ def decode_audio_samples(
     signature. ``LAGOON_MEDIA_TIER`` forces a tier globally."""
     from lagoon_spark.operators import native_media as nm
 
-    if tier not in ("auto", "stdlib", "native"):
-        raise ValueError(f"tier must be auto|stdlib|native, got {tier!r}")
-    env = nm.media_tier()
-    eff = env if env != "auto" else tier
-    if eff == "native" or (eff == "auto" and nm.register(df.sparkSession)):
-        if eff == "native" and not nm.register(df.sparkSession):
-            raise RuntimeError(
-                "native media tier requested but unavailable (no JDK?)"
-            )
+    if nm.resolve_tier(df.sparkSession, tier):
         return nm.decode_audio_samples_native(df, id_col, content_col)
     import numpy as np
 
@@ -709,13 +691,7 @@ def decode_gif_frames(
     on shared ones."""
     from lagoon_spark.operators import native_media as nm
 
-    if tier not in ("auto", "stdlib", "native"):
-        raise ValueError(f"tier must be auto|stdlib|native, got {tier!r}")
-    env = nm.media_tier()
-    eff = env if env != "auto" else tier
-    if eff == "native" and not nm.register(df.sparkSession):
-        raise RuntimeError("native media tier requested but unavailable (no JDK?)")
-    if eff != "stdlib" and nm.register(df.sparkSession):
+    if nm.resolve_tier(df.sparkSession, tier):
         return nm.decode_gif_frames_native(df, id_col, content_col)
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -871,13 +847,7 @@ def decode_video_frames(
 
     if every < 1:
         raise ValueError(f"every must be >= 1, got {every}")
-    if tier not in ("auto", "stdlib", "native"):
-        raise ValueError(f"tier must be auto|stdlib|native, got {tier!r}")
-    env = nm.media_tier()
-    eff = env if env != "auto" else tier
-    if eff == "native" and not nm.register(df.sparkSession):
-        raise RuntimeError("native media tier requested but unavailable (no JDK?)")
-    if eff != "stdlib" and nm.register(df.sparkSession):
+    if nm.resolve_tier(df.sparkSession, tier):
         return nm.decode_video_frames_native(df, id_col, content_col, every=every)
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -978,13 +948,7 @@ def resize_pixels(
         raise ValueError(f"factor must be >= 1, got {factor}")
     if channels < 1:
         raise ValueError(f"channels must be >= 1, got {channels}")
-    if tier not in ("auto", "stdlib", "native"):
-        raise ValueError(f"tier must be auto|stdlib|native, got {tier!r}")
-    env = nm.media_tier()
-    eff = env if env != "auto" else tier
-    if eff == "native" and not nm.register(df.sparkSession):
-        raise RuntimeError("native media tier requested but unavailable (no JDK?)")
-    if eff != "stdlib" and nm.register(df.sparkSession):
+    if nm.resolve_tier(df.sparkSession, tier):
         return nm.resize_pixels_native(
             df, id_col, width_col, height_col, data_col,
             factor=factor, channels=channels,

@@ -65,6 +65,23 @@ def media_tier() -> str:
     return t
 
 
+def resolve_tier(spark: SparkSession, tier: str, auto_native: bool = True) -> bool:
+    """Whether a media operator called with ``tier`` runs its native
+    branch. ``LAGOON_MEDIA_TIER`` overrides ``tier``; ``auto`` picks
+    native when ``auto_native`` holds (the caller's input suits the
+    native tier) and the UDFs register; ``native`` raises when they
+    cannot."""
+    if tier not in ("auto", "stdlib", "native"):
+        raise ValueError(f"tier must be auto|stdlib|native, got {tier!r}")
+    env = media_tier()
+    eff = env if env != "auto" else tier
+    if eff == "native":
+        if not register(spark):
+            raise RuntimeError("native media tier requested but unavailable (no JDK?)")
+        return True
+    return eff == "auto" and auto_native and register(spark)
+
+
 def _spark_classpath() -> str:
     import pyspark
 

@@ -72,3 +72,36 @@ def test_compare_flags_a_lane_only_under_every_probe():
     ratios, flags = bench.compare(now, {"cpu": 1.0, "shuffle": 2.0}, prev)
     assert ratios == {"a": 1.0, "b": 3.0, "e": 3.0}
     assert flags == {"b": 3.0}
+
+
+def test_drifted_flags_are_retimed_before_they_stand(monkeypatch):
+    """A flag from probes timed before a host slowdown does not stand:
+    the flagged lanes are re-timed next to fresh probes, and only a
+    lane still > 1.25× under every fresh probe stays flagged. Replays
+    the drift of two runs of identical code (cpu probe 4.37 → 3.61 s,
+    lanes flagged at 1.62×)."""
+    prev = {
+        "probes": {"cpu": 4.37, "shuffle": 2.0},
+        "lanes": {"q41": {"wall": 1.0}, "q74": {"wall": 1.0}, "q02": {"wall": 1.0}},
+    }
+    # probes timed fast at the start; the lanes ran once the host slowed
+    fast = {"cpu": 3.61, "shuffle": 1.65}
+    lanes = {
+        "q41": {"wall": 1.34, "tag": "cpu"},  # unchanged code, drift only
+        "q74": {"wall": 1.34, "tag": "shuffle"},  # unchanged code, drift only
+        "q02": {"wall": 2.2, "tag": "cpu"},  # a real regression
+    }
+    slow = {"cpu": 5.2, "shuffle": 2.4}
+    retimed = []
+
+    def fake_run_lane(spark, name, data_dir, reps=3, *a, **kw):
+        retimed.append(name)
+        return {"wall": {"q02": 2.9}.get(name, 1.34), "tag": lanes[name]["tag"]}
+
+    monkeypatch.setattr(bench, "probes", lambda spark, data_dir: slow)
+    monkeypatch.setattr(bench, "run_lane", fake_run_lane)
+    assert set(bench.compare(lanes, fast, prev)[1]) == {"q41", "q74", "q02"}
+    ratios, flags = bench.regressions(None, "sf", lanes, fast, prev, 1)
+    assert sorted(retimed) == ["q02", "q41", "q74"]
+    assert ratios == bench.compare(lanes, fast, prev)[0]
+    assert flags == {"q02": 2.44}
